@@ -295,19 +295,21 @@ def create_response(
 ) -> DataFrame:
     """Response derivation (reference A8, messages/base.py:593-609):
     event += '_response', response_to = request message_id, restamped
-    application identity, fresh header."""
-    out = df
-    for name, value in (
-        ("response_to", col("message_id")),
-        ("event", F.concat(col("event"), lit("_response"))),
-        ("message_id", lit(None).cast("string")),
-        ("application_name", lit(application_name)),
-        ("application_instance", lit(application_instance)),
-    ):
-        out = out.withColumn(name, value)
+    application identity, fresh header.
+
+    One projection: every expression reads the *input* columns, so
+    ``response_to`` takes the request's ``message_id`` before it is nulled.
+    Existing columns keep their position; new ones append in this order."""
+    cols = {
+        "response_to": col("message_id"),
+        "event": F.concat(col("event"), lit("_response")),
+        "message_id": lit(None).cast("string"),
+        "application_name": lit(application_name),
+        "application_instance": lit(application_instance),
+    }
     if "header" in df.columns:
-        out = out.withColumn("header", make_header(caller_application=application_name))
-    return out
+        cols["header"] = make_header(caller_application=application_name)
+    return df.withColumns(cols)
 
 
 def stream_entry_to_envelope(df: DataFrame) -> DataFrame:

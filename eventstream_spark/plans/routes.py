@@ -7,7 +7,13 @@ Streaming: ONE ``readStream`` scan per bus fanned out to every route inside
 ``foreachBatch`` — the single-scan multi-sink pattern (reference A4: one
 consumer-group read dispatching to all handler lists; SURVEY §4.2 custom
 item 1). The micro-batch is persisted once so N routes don't re-read the
-source, and each sink write is append-mode idempotent per batch.
+source, then every route builds its plan and writes on its own thread, the
+way the reference runs an event's handlers concurrently (common.py:456-462):
+a batch takes about as long as its slowest route, not the sum of them.
+Delivery is at least once: a batch that fails or is interrupted before its
+commit is replayed whole, and a parquet route appends its rows again (see
+``streaming.sinks.idempotent_parquet_sink`` for a per-batch-idempotent
+writer); noop and memory routes are unaffected by a replay.
 
 Scale: at 100 TB the per-route filters are pushed into the shared scan's
 row-group pruning when routes run as separate batch jobs; in the streaming
@@ -17,9 +23,12 @@ fan-out the single persisted micro-batch bounds memory by trigger size
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.functions import col
 from pyspark.storagelevel import StorageLevel
+from pyspark.util import inheritable_thread_target
 
 from ..catalog import fix_nanos_ts, load
 from ..codec import normalize_envelope
@@ -74,6 +83,10 @@ def _write_batch(df: DataFrame, sink: SinkConfig, batch_tag: str | None = None) 
         raise ValueError(f"unknown sink kind {sink.kind!r}")
 
 
+def _write_route(df: DataFrame, route: RouteConfig, batch_tag: str) -> None:
+    _write_batch(_apply_route(df, route), route.sink, batch_tag)
+
+
 def run_batch(spark: SparkSession, cfg: EngineConfig, sf_dir: str) -> dict[str, int]:
     """Execute every bus/route once over the batch view; returns row counts.
 
@@ -117,6 +130,14 @@ def start_streaming(
     Spark analog of tailing a Redis stream with a consumer group (A1/A2);
     the checkpoint replaces group offsets (A3), and replay-on-failure
     replaces the inbox/idle-reclaim machinery (A15-A18).
+
+    Each micro-batch is persisted once and its routes run concurrently, one
+    thread per route, each building its route plan and writing its sink.
+    Every thread inherits the query's job group, so ``stop()`` cancels the
+    route writes in flight. The batch waits for all of them; if any route
+    fails, the first failure (in route order) fails the batch, which is
+    not committed and is replayed on restart: at-least-once, so parquet
+    routes may hold a replayed batch's rows twice.
     """
     # fix_nanos_ts's NTZ→LTZ cast reads the session timezone: pin UTC before
     # building the stream so a caller-supplied non-UTC session can't shift
@@ -132,8 +153,22 @@ def start_streaming(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            for route in bus.routes:
-                _write_batch(_apply_route(batch_df, route), route.sink, str(batch_id))
+            # A zero-route bus still commits its (empty) fan-out.
+            with ThreadPoolExecutor(max(len(bus.routes), 1)) as pool:
+                # One wrapper per route: each captures its own copy of this
+                # thread's local properties (the query's job group among
+                # them) for its pool thread, so no two threads share one.
+                writes = [
+                    pool.submit(
+                        inheritable_thread_target(batch_df.sparkSession)(_write_route),
+                        batch_df,
+                        route,
+                        str(batch_id),
+                    )
+                    for route in bus.routes
+                ]
+            for write in writes:
+                write.result()
         finally:
             batch_df.unpersist()
 

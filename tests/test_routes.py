@@ -217,6 +217,118 @@ def test_streaming_fanout_equals_batch(spark, sf_dir, tmp_path, monkeypatch):
     assert spark.read.parquet(str(tmp_path / "stream_clicks")).count() == want.count()
 
 
+def _chained_create_response(df, application_name, application_instance):
+    """Reference for create_response: one withColumn per field, in order."""
+    import pyspark.sql.functions as F
+
+    from eventstream_spark.codec import make_header
+
+    out = df
+    for name, value in (
+        ("response_to", F.col("message_id")),
+        ("event", F.concat(F.col("event"), F.lit("_response"))),
+        ("message_id", F.lit(None).cast("string")),
+        ("application_name", F.lit(application_name)),
+        ("application_instance", F.lit(application_instance)),
+    ):
+        out = out.withColumn(name, value)
+    if "header" in df.columns:
+        out = out.withColumn("header", make_header(caller_application=application_name))
+    return out
+
+
+def test_create_response_one_projection_matches_chained(spark, sf_dir):
+    """create_response's single projection keeps the chained form's column
+    order, schema and values: response_to takes the INPUT message_id."""
+    from eventstream_spark.codec import create_response, normalize_envelope
+
+    env = normalize_envelope(
+        load(spark, sf_dir, "events").limit(50), application_name="req", application_instance="r-1"
+    )
+
+    def rows(df, cols):
+        return sorted(map(tuple, df.select(*cols).collect()), key=repr)
+
+    # with a header and a response_to column, and with neither (appended)
+    for frame in (env, env.drop("header", "response_to")):
+        got = create_response(frame, "resp-app", "inst-9")
+        want = _chained_create_response(frame, "resp-app", "inst-9")
+        assert got.schema == want.schema
+        # header.date is a fresh current_timestamp per query
+        cols = [c for c in got.columns if c != "header"]
+        if "header" in got.columns:
+            cols += ["header.caller_application", "header.host"]
+        assert rows(got, cols) == rows(want, cols)
+        assert got.where(col("response_to").isNull() | col("message_id").isNotNull()).count() == 0
+
+
+def _stream_bus(tmp_path, sf_dir, routes):
+    from eventstream_spark.plans.config import BusConfig
+
+    src = tmp_path / "stream_src"
+    src.mkdir()
+    shutil.copy(table_path(sf_dir, "events"), src / "part-0.parquet")
+    cfg = EngineConfig(
+        application_name="fan_app",
+        application_instance="i-1",
+        busses=(BusConfig(name="ev", source_path=str(src), routes=tuple(routes)),),
+    )
+    return cfg, str(src)
+
+
+def _exploding_transform(df):
+    raise RuntimeError("route transform exploded")
+
+
+def test_failing_route_fails_the_batch(spark, sf_dir, tmp_path):
+    """An exception raised on a route's fan-out thread reaches the query:
+    the query terminates with it and batch 0 is never committed."""
+    from pyspark.errors import StreamingQueryException
+
+    from eventstream_spark.plans.config import RouteConfig, SinkConfig, TransformRef
+
+    cfg, src = _stream_bus(
+        tmp_path,
+        sf_dir,
+        [
+            RouteConfig(name="views", event="view", sink=SinkConfig("noop")),
+            RouteConfig(
+                name="broken",
+                event="click",
+                transform=TransformRef(__name__, "_exploding_transform"),
+                sink=SinkConfig("noop"),
+            ),
+        ],
+    )
+    schema = spark.read.parquet(src).schema
+    ckpt = tmp_path / "ckpt"
+    q = start_streaming(spark, cfg, cfg.busses[0], src, schema, str(ckpt))
+    with pytest.raises(StreamingQueryException, match="route transform exploded"):
+        q.awaitTermination(120)
+    assert not q.isActive
+    assert not (ckpt / "commits" / "0").exists()
+
+
+def test_route_writes_carry_the_query_job_group(spark, sf_dir, tmp_path):
+    """Every route write runs in the query's job group (its runId), the
+    group StreamingQuery.stop() cancels — a plain pool thread has none."""
+    from eventstream_spark.plans.config import RouteConfig, SinkConfig
+
+    routes = [
+        RouteConfig(name="clicks", event="click", sink=SinkConfig("parquet", str(tmp_path / "clicks"))),
+        RouteConfig(name="views", event="view", sink=SinkConfig("noop")),
+    ]
+    cfg, src = _stream_bus(tmp_path, sf_dir, routes)
+    schema = spark.read.parquet(src).schema
+    q = start_streaming(spark, cfg, cfg.busses[0], src, schema, str(tmp_path / "ckpt"))
+    assert q.awaitTermination(120)
+    assert q.exception() is None
+    data_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+    assert data_batches >= 1
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) >= len(routes) * data_batches
+
+
 def test_group_naming_broadcast_vs_compete(tmp_path):
     from eventstream_spark.plans.config import checkpoint_dir_for, generate_group_name
 
