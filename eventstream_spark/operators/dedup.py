@@ -45,7 +45,8 @@ from ..functions import (
 from .similarity import lsh_bucketed, lsh_sig_cte_sql
 
 # Fixed MinHash permutation parameters: h' = (a*h + b) mod P over the 48-bit
-# shingle hash. a < 2^14 keeps a*h inside int64. 16 hashes → 8 bands of 2.
+# shingle hash. a < 2^14 keeps a*h inside int64. 16 hashes → 8 bands of 2
+# by default (``band_table``'s rows_per_band).
 _P = 999983
 _MINHASH_PARAMS: list[tuple[int, int]] = [
     (4097, 12289), (5261, 99991), (6151, 524287), (7001, 131071),
@@ -53,7 +54,6 @@ _MINHASH_PARAMS: list[tuple[int, int]] = [
     (12203, 331), (13313, 7919), (14327, 27644), (15359, 999331),
     (3571, 42859), (2203, 900001), (1229, 123457), (16381, 777777),
 ]
-_N_BANDS = 8  # 2 rows per band
 
 
 _SHINGLE_N = 3  # word n-gram width: wide enough to be discriminative even
@@ -387,20 +387,22 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def band_table(docs: DataFrame) -> DataFrame:
-    """(doc_id, band, key) — the 8-band × 2-row banding of the MinHash
-    signature, the LSH blocking key for both the self-join (q42) and the
-    incremental existing↔incoming join (q120)."""
+def band_table(docs: DataFrame, rows_per_band: int = 2) -> DataFrame:
+    """(doc_id, band, key) — the banding of the 16-hash MinHash signature
+    into floor(16 / rows_per_band) bands of ``rows_per_band`` rows (8 × 2
+    by default), the LSH blocking key for both the self-join (q42/q42b)
+    and the incremental existing↔incoming join (q120)."""
     mh = minhash_signatures(docs)
+    r = rows_per_band
     bands = F.array(
         *[
             F.struct(
                 lit(k).alias("band"),
                 F.concat_ws(
-                    ",", col(f"mh{2 * k}").cast("string"), col(f"mh{2 * k + 1}").cast("string")
+                    ",", *[col(f"mh{j}").cast("string") for j in range(k * r, k * r + r)]
                 ).alias("key"),
             )
-            for k in range(_N_BANDS)
+            for k in range(len(_MINHASH_PARAMS) // r)
         ]
     )
     return mh.select("doc_id", F.explode(bands).alias("b")).select(
@@ -408,11 +410,12 @@ def band_table(docs: DataFrame) -> DataFrame:
     )
 
 
-def lsh_candidate_pairs(docs: DataFrame) -> DataFrame:
-    """Distinct candidate pairs from 8 bands × 2 rows banding of the MinHash
-    signature. Shuffle key = (band, band_key): well distributed, small state."""
+def lsh_candidate_pairs(docs: DataFrame, rows_per_band: int = 2) -> DataFrame:
+    """Distinct candidate pairs from the ``band_table`` banding of the
+    MinHash signature. Shuffle key = (band, band_key): well distributed,
+    small state."""
     bt = persist_tracked(
-        band_table(docs)
+        band_table(docs, rows_per_band)
         # Both sides of the self-join read this; persist (tracked, freed by
         # cache.release_cached) so the md5 + 16 min-agg pipeline runs once.
     )
@@ -464,41 +467,12 @@ def q42b_minhash_lsh_grown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one count (driver scalar — the q217b auto_cells convention),
     the one-aggregation signature build (16 min-aggs, no permutation
-    explode), a map-side slice/concat per band, and the band-key
+    explode), a map-side concat per band, and the band-key
     self-join — shuffle on (band, key), well distributed by
     construction."""
     docs = load(spark, sf_dir, "documents")
-    n_docs = docs.count()
-    r = _grown_rows_per_band(n_docs)
-    b = max(1, len(_MINHASH_PARAMS) // r)
-    mh = minhash_signatures(docs)
-    sig = F.array(*[col(f"mh{j}").cast("string") for j in range(len(_MINHASH_PARAMS))])
-    bands = F.array(
-        *[
-            F.struct(
-                lit(k).alias("band"),
-                F.array_join(F.slice(sig, k * r + 1, r), ",").alias("key"),
-            )
-            for k in range(b)
-        ]
-    )
-    bt = persist_tracked(
-        mh.select("doc_id", F.explode(bands).alias("bb")).select(
-            "doc_id", col("bb.band").alias("band"), col("bb.key").alias("key")
-        )
-    )
-    a = bt.alias("a")
-    c = bt.alias("b")
-    return (
-        a.join(
-            c,
-            (col("a.band") == col("b.band"))
-            & (col("a.key") == col("b.key"))
-            & (col("a.doc_id") < col("b.doc_id")),
-        )
-        .select(col("a.doc_id").alias("d1"), col("b.doc_id").alias("d2"))
-        .distinct()
-        .orderBy("d1", "d2")
+    return lsh_candidate_pairs(docs, _grown_rows_per_band(docs.count())).orderBy(
+        "d1", "d2"
     )
 
 
@@ -878,71 +852,46 @@ def q44b_embedding_neardup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # --- oracles ---------------------------------------------------------------
 
-def _lsh_pairs_ctes() -> str:
+def _bands_ctes(side: str = "", pred: str = "", rows_per_band: str = "2") -> str:
+    """CTE chain ending in ``bands{side}(doc_id, band, key)`` — the duckdb
+    twin of ``band_table``: the 16-hash signature as a VARCHAR list, cut
+    into 16 // r bands of r rows by list_slice. ``rows_per_band`` is the
+    SQL expression for r (the ``2`` default, or q42b's corpus-grown
+    derivation); ``side``/``pred`` restrict it to one split of the corpus
+    (q120's existing and incoming sides)."""
+    nh = len(_MINHASH_PARAMS)
+    sig = ", ".join(
+        f"CAST(MIN(({a} * h + {b}) % {_P}) AS VARCHAR)" for a, b in _MINHASH_PARAMS
+    )
+    sx = f"_{side}" if side else ""
+    sh = _SHINGLES_SQL
+    if pred:
+        sh = sh.replace("FROM documents", f"FROM documents WHERE {pred}")
+    return f"""sh{sx} AS ({sh}),
+h{sx} AS (SELECT doc_id, {hash48_sql('s')} AS h FROM sh{sx}),
+mh{sx} AS (SELECT doc_id, [{sig}] AS sig FROM h{sx} GROUP BY doc_id),
+p{sx} AS (SELECT {rows_per_band} AS r),
+bands{sx} AS (
+  SELECT doc_id, t.band,
+         array_to_string(list_slice(sig, t.band * p.r + 1, t.band * p.r + p.r),
+                         ',') AS key
+  FROM mh{sx}, p{sx} p, UNNEST(range(0, {nh} // p.r)) AS t(band))"""
+
+
+def _lsh_pairs_ctes(rows_per_band: str = "2") -> str:
     """The shared CTE chain producing the LSH candidate pairs (d1 < d2) —
-    reused by the q42 oracle and the q55 recursive-CTE clusters oracle."""
-    mins = ", ".join(
-        f"MIN(({a} * h + {b}) % {_P}) AS mh{j}" for j, (a, b) in enumerate(_MINHASH_PARAMS)
-    )
-    bands = "\nUNION ALL ".join(
-        f"SELECT doc_id, {k} AS band, mh{2 * k}::VARCHAR || ',' || mh{2 * k + 1}::VARCHAR AS key FROM mh"
-        for k in range(_N_BANDS)
-    )
-    return f"""sh AS ({_SHINGLES_SQL}),
-h AS (SELECT doc_id, {hash48_sql('s')} AS h FROM sh),
-mh AS (SELECT doc_id, {mins} FROM h GROUP BY doc_id),
-bands AS ({bands}),
+    reused by the q42/q42b oracles and the q55/q58 recursive-CTE
+    clusters oracles."""
+    return f"""{_bands_ctes(rows_per_band=rows_per_band)},
 pairs AS (
   SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
   FROM bands a JOIN bands b
     ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id)"""
 
 
-def _minhash_grown_sql() -> str:
-    """q42b mirror: rows-per-band = GREATEST(2, digits(COUNT(*))) — the
-    identical integer derivation as _grown_rows_per_band — with the
-    banding spelled as a dynamic list_slice over the signature list, so
-    ONE SQL text covers every corpus size."""
-    nh = len(_MINHASH_PARAMS)
-    mins = ", ".join(
-        f"MIN(({a} * h + {b}) % {_P}) AS mh{j}"
-        for j, (a, b) in enumerate(_MINHASH_PARAMS)
-    )
-    sig_list = "[" + ", ".join(f"CAST(mh{j} AS VARCHAR)" for j in range(nh)) + "]"
-    return f"""
-WITH sh AS ({_SHINGLES_SQL}),
-h AS (SELECT doc_id, {hash48_sql('s')} AS h FROM sh),
-mh AS (SELECT doc_id, {mins} FROM h GROUP BY doc_id),
-p AS (SELECT GREATEST(2, len(CAST(COUNT(*) AS VARCHAR))) AS r FROM documents),
-sg AS (SELECT doc_id, {sig_list} AS sig FROM mh),
-bands AS (
-  SELECT doc_id, t.band,
-         array_to_string(list_slice(sig, t.band * p.r + 1, t.band * p.r + p.r),
-                         ',') AS key
-  FROM sg, p, UNNEST(range(0, {nh} // p.r)) AS t(band))
-SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-FROM bands a JOIN bands b
-  ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-ORDER BY 1, 2
-"""
-
-
-def _bands_ctes(side: str, pred: str) -> str:
-    """Side-restricted twin of the banding CTEs in ``_lsh_pairs_ctes`` —
-    the q120 oracle needs bands for the existing and incoming splits
-    separately."""
-    mins = ", ".join(
-        f"MIN(({a} * h + {b}) % {_P}) AS mh{j}" for j, (a, b) in enumerate(_MINHASH_PARAMS)
-    )
-    bands = "\nUNION ALL ".join(
-        f"SELECT doc_id, {k} AS band, mh{2 * k}::VARCHAR || ',' || mh{2 * k + 1}::VARCHAR AS key FROM mh_{side}"
-        for k in range(_N_BANDS)
-    )
-    sh = _SHINGLES_SQL.replace("FROM documents", f"FROM documents WHERE {pred}")
-    return f"""sh_{side} AS ({sh}),
-h_{side} AS (SELECT doc_id, {hash48_sql('s')} AS h FROM sh_{side}),
-mh_{side} AS (SELECT doc_id, {mins} FROM h_{side} GROUP BY doc_id),
-bands_{side} AS ({bands})"""
+# q42b's rows-per-band: GREATEST(2, digits(COUNT(*))) — the identical
+# integer derivation as _grown_rows_per_band.
+_GROWN_ROWS_SQL = "(SELECT GREATEST(2, len(CAST(COUNT(*) AS VARCHAR))) FROM documents)"
 
 
 def _incremental_sql() -> str:
@@ -963,9 +912,9 @@ FROM documents d WHERE d.doc_id % 10 = 9 ORDER BY 1
 """
 
 
-def _minhash_sql() -> str:
+def _minhash_sql(rows_per_band: str = "2") -> str:
     return f"""
-WITH {_lsh_pairs_ctes()}
+WITH {_lsh_pairs_ctes(rows_per_band)}
 SELECT d1, d2 FROM pairs ORDER BY 1, 2
 """
 
@@ -2005,7 +1954,7 @@ SELECT th.t_milli,
 FROM th LEFT JOIN fl USING (t_milli) CROSS JOIN tot ORDER BY 1
 """,
     "q42_minhash_lsh": _minhash_sql(),
-    "q42b_minhash_lsh_grown": _minhash_grown_sql(),
+    "q42b_minhash_lsh_grown": _minhash_sql(_GROWN_ROWS_SQL),
     "q241_exact_span_decontam": _decontam_sql(),
     "q120_incremental_dedup": _incremental_sql(),
     "q116_contamination": f"""

@@ -22,7 +22,7 @@ from __future__ import annotations
 import hashlib
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql.functions import broadcast, col, lit
 
 from ..cache import persist_tracked
@@ -42,6 +42,8 @@ from ..functions import (
 )
 
 _N_PLANES = 6  # 2^6 = 64 buckets
+
+_AUDIT_PANEL = (100, 101, 102)  # the pinned probe queries of the ANN queries and audits
 
 # Fan-out budget for the vectorized-GEMM mapInPandas passes: below this
 # many input bytes per core the spread exchange costs more than the
@@ -230,28 +232,36 @@ def q51_topk_per_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- hyperplane-LSH ANN ----------------------------------------------------
 
-def lsh_bucketed(emb: DataFrame, n_planes: int = _N_PLANES) -> DataFrame:
-    """(vec_id, v, bucket) — map-side signature. Plane weights ride as ONE
-    2-D literal + transform (same small-expression-tree trick as
-    _centroid_dists — identical projections, cheaper codegen); their width
-    is the data-derived dim, never a fixture constant."""
-    planes = plane_weights(n_planes, embedding_dim(emb))
-    e = spread(emb).select(col("vec_id"), as_double_array(col("embedding")).alias("v"))
+def _plane_bucket(v: Column, planes: list[list[float]]) -> tuple[Column, Column]:
+    """(projections, bucket) of vector column ``v``: the signed projections
+    onto ``planes`` and the long bucket id whose bit j is set when
+    projection j is non-negative. Plane weights ride as ONE 2-D literal +
+    transform (same small-expression-tree trick as _centroid_dists —
+    identical projections, cheaper codegen). Shared by the batch index
+    build, multi-probe (which also ranks the projections for its flip bit)
+    and the q132 streaming ingest."""
     pmat = matrix_literal(planes)
     powers = F.array(*[lit(1 << j) for j in range(len(planes))])
-    projections = F.transform(pmat, lambda w: dot(col("v"), w))
+    projections = F.transform(pmat, lambda w: dot(v, w))
     bucket = F.aggregate(
         F.zip_with(projections, powers, lambda d, p: F.when(d >= 0, p).otherwise(lit(0))),
         lit(0),
         lambda acc, x: acc + x,
-    )
+    ).cast("long")
+    return projections, bucket
+
+
+def lsh_bucketed(emb: DataFrame, n_planes: int = _N_PLANES) -> DataFrame:
+    """(vec_id, v, bucket) — map-side signature (``_plane_bucket``); the
+    plane width is the data-derived dim, never a fixture constant."""
+    planes = plane_weights(n_planes, embedding_dim(emb))
+    e = spread(emb).select(col("vec_id"), as_double_array(col("embedding")).alias("v"))
+    _, bucket = _plane_bucket(col("v"), planes)
     # nsq = dot(v, v), precomputed per vector so the pairwise cosine inside
     # the bucket join folds ONE zip (the cross dot) instead of three; the
     # value is bit-identical because cosine = dot / sqrt(nsq_a * nsq_b)
     # keeps the same multiply-then-sqrt tree as functions.cosine.
-    return e.withColumn("bucket", bucket.cast("long")).withColumn(
-        "nsq", dot(col("v"), col("v"))
-    )
+    return e.withColumn("bucket", bucket).withColumn("nsq", dot(col("v"), col("v")))
 
 
 def lsh_ann(emb: DataFrame, k: int = 3) -> DataFrame:
@@ -395,14 +405,7 @@ def lsh_multiprobe_ann(emb: DataFrame, k: int = 3, n_planes: int | None = None) 
     planes = plane_weights(n_planes or _N_PLANES, embedding_dim(emb))
     n = len(planes)
     e = spread(emb).select(col("vec_id"), as_double_array(col("embedding")).alias("v"))
-    pmat = matrix_literal(planes)
-    powers = F.array(*[lit(1 << j) for j in range(n)])
-    proj = F.transform(pmat, lambda w: dot(col("v"), w))
-    bucket = F.aggregate(
-        F.zip_with(proj, powers, lambda d, p: F.when(d >= 0, p).otherwise(lit(0))),
-        lit(0),
-        lambda acc, x: acc + x,
-    ).cast("long")
+    proj, bucket = _plane_bucket(col("v"), planes)
     # argmin |projection|: the struct array_min orders by (margin, j) — the
     # same first-match-on-ties rule as the oracle's CASE chain.
     idxs = F.array(*[lit(j) for j in range(n)])
@@ -549,7 +552,7 @@ def ivf_ann(
 
 def q53_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    return ivf_ann(emb, col("vec_id").isin(100, 101, 102), k=5)
+    return ivf_ann(emb, col("vec_id").isin(*_AUDIT_PANEL), k=5)
 
 
 # --- product quantization (PQ) ANN ----------------------------------------
@@ -645,7 +648,7 @@ def pq_ann(emb: DataFrame, query_pred, k: int = 5) -> DataFrame:
 
 def q85_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    return pq_ann(emb, col("vec_id").isin(100, 101, 102), k=5)
+    return pq_ann(emb, col("vec_id").isin(*_AUDIT_PANEL), k=5)
 
 
 # --- q217: IVF-PQ combined ANN (residual quantization) -----------------------
@@ -732,9 +735,7 @@ def q217_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         code_cols.append(bc["c"].cast("long").alias(f"c{m}"))
     enc = assigned.select("vec_id", "ci", *code_cols)
 
-    q = assigned.where(col("vec_id").isin(100, 101, 102)).select(
-        col("vec_id").alias("q_id"), col("v").alias("qv")
-    )
+    q = _panel(assigned, "v", "qv")
     q_dists = F.transform(cmat, lambda cv: sq_l2(col("qv"), cv))
     probe = F.slice(
         F.array_sort(
@@ -942,7 +943,7 @@ def _ivfpq_grown_index(spark: SparkSession, sf_dir: str):
     # bounded collects (the prefix-offset scalar class).
     qrows = sorted(
         (int(r.vec_id), list(r.v))
-        for r in ep.where(col("vec_id").isin(100, 101, 102)).collect()
+        for r in ep.where(col("vec_id").isin(*_AUDIT_PANEL)).collect()
     )
     qt_rows = []
     for q_id, qv in qrows:
@@ -986,6 +987,72 @@ def _ivfpq_adc_topk(enc: DataFrame, qt: DataFrame, k: int = 5) -> DataFrame:
     )
 
 
+# --- recall audits ---------------------------------------------------------
+# q222/q227/q238/q240/q242 each score an index against the exact top-5 of
+# one pinned query panel; the ground truth and the scoring live here once.
+
+def _milli(v: Column) -> Column:
+    """Elementwise FLOOR(x·1000+0.5) as bigint: the milli-quantized space
+    where every squared distance is an exact, tie-stable integer."""
+    return F.transform(v, lambda x: F.floor(x * 1000 + lit(0.5)).cast("long"))
+
+
+def _panel(e: DataFrame, vec: str, qvec: str) -> DataFrame:
+    """(q_id, <qvec>): the audit panel's rows of ``e``."""
+    return e.where(col("vec_id").isin(*_AUDIT_PANEL)).select(
+        col("vec_id").alias("q_id"), col(vec).alias(qvec)
+    )
+
+
+def _exact_topk(e: DataFrame, q: DataFrame, vec: str, qvec: str, k: int = 5) -> DataFrame:
+    """(q_id, neighbor_id): the persisted exact top-k by squared L2 of each
+    panel query in ``q`` over the corpus ``e`` (self excluded, ties to the
+    smaller vec_id) — the q51 broadcast-query shape. ``vec``/``qvec`` name
+    the vector columns: q238 ranks in float space, the others in the
+    milli-quantized space of the index they audit."""
+    w = Window.partitionBy("q_id").orderBy(col("d"), col("neighbor_id"))
+    return persist_tracked(
+        e.crossJoin(broadcast(q))
+        .where(col("vec_id") != col("q_id"))
+        .select(
+            "q_id",
+            col("vec_id").alias("neighbor_id"),
+            sq_l2(col(vec), col(qvec)).alias("d"),
+        )
+        .withColumn("rank", F.row_number().over(w))
+        .where(col("rank") <= k)
+        .select("q_id", "neighbor_id")
+    )
+
+
+def _recall_rows(
+    panel: DataFrame,
+    hits: DataFrame,
+    cand_hits: DataFrame | None = None,
+    variant: str | None = None,
+) -> DataFrame:
+    """One recall@5 row per panel query. ``hits`` holds the exact top-5
+    rows (q_id, neighbor_id) the index returned → ``n_hits``,
+    ``recall_at_5``; ``cand_hits`` (two-layer audits) the ones its probed
+    cells admitted → ``n_cand_hits``, ``cand_recall``, placed first;
+    ``variant`` leads with a literal label. A query with no hits scores 0
+    and keeps its row: the query an index misses entirely is the one the
+    audit exists to show."""
+    out = panel.select("q_id")
+    cols = [lit(variant).alias("variant")] if variant else []
+    cols.append(col("q_id"))
+    for name, h, n_col, r_col in (
+        ("ch", cand_hits, "n_cand_hits", "cand_recall"),
+        ("h", hits, "n_hits", "recall_at_5"),
+    ):
+        if h is None:
+            continue
+        out = out.join(h.groupBy("q_id").agg(F.count("*").alias(name)), "q_id", "left")
+        n = F.coalesce(col(name), lit(0))
+        cols += [n.cast("long").alias(n_col), F.round(n / lit(5.0), 4).alias(r_col)]
+    return out.select(*cols)
+
+
 def q222_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-layer recall@5 audit of the deployable IVF-PQ index (q217b)
     against exact 5-NN — the acceptance measurement every production ANN
@@ -1013,13 +1080,8 @@ def q222_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     assigned, enc, qt, qrows = _ivfpq_grown_index(spark, sf_dir)
     approx = _ivfpq_adc_topk(enc, qt).select("q_id", "neighbor_id")
-    emb = load(spark, sf_dir, "embeddings")
-    e = spread(emb).select(
-        "vec_id",
-        F.transform(
-            as_double_array(col("embedding")),
-            lambda x: F.floor(x * 1000 + lit(0.5)).cast("long"),
-        ).alias("xm"),
+    e = spread(load(spark, sf_dir, "embeddings")).select(
+        "vec_id", _milli(as_double_array(col("embedding"))).alias("xm")
     )
     q = spark.createDataFrame(
         [
@@ -1028,49 +1090,108 @@ def q222_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "q_id long, qm array<bigint>",
     )
-    w = Window.partitionBy("q_id").orderBy(col("d"), col("neighbor_id"))
-    exact = persist_tracked(
-        e.crossJoin(broadcast(q))
-        .where(col("vec_id") != col("q_id"))
-        .select(
-            "q_id",
-            col("vec_id").alias("neighbor_id"),
-            sq_l2(col("xm"), col("qm")).alias("d"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(col("rank") <= 5)
-        .select("q_id", "neighbor_id")
-    )
+    exact = _exact_topk(e, q, "xm", "qm")
     probe_pairs = qt.select("q_id", "cell").distinct()
-    cand_hits = (
-        exact.join(
-            assigned.select(col("vec_id").alias("neighbor_id"), "cell"),
-            "neighbor_id",
-        )
-        .join(broadcast(probe_pairs), ["q_id", "cell"])
-        .groupBy("q_id")
-        .agg(F.count("*").alias("ch"))
-    )
-    hits = (
-        exact.join(approx, ["q_id", "neighbor_id"])
-        .groupBy("q_id")
-        .agg(F.count("*").alias("h"))
-    )
-    return (
-        q.select("q_id")
-        .join(cand_hits, "q_id", "left")
-        .join(hits, "q_id", "left")
-        .select(
-            "q_id",
-            F.coalesce(col("ch"), lit(0)).cast("long").alias("n_cand_hits"),
-            F.round(F.coalesce(col("ch"), lit(0)) / lit(5.0), 4).alias(
-                "cand_recall"
-            ),
-            F.coalesce(col("h"), lit(0)).cast("long").alias("n_hits"),
-            F.round(F.coalesce(col("h"), lit(0)) / lit(5.0), 4).alias("recall_at_5"),
-        )
-        .orderBy("q_id")
-    )
+    asn = assigned.select(col("vec_id").alias("neighbor_id"), "cell")
+    return _recall_rows(
+        q,
+        exact.join(approx, ["q_id", "neighbor_id"]),
+        exact.join(asn, "neighbor_id").join(broadcast(probe_pairs), ["q_id", "cell"]),
+    ).orderBy("q_id")
+
+
+# Oracle twins of the recall-audit helpers above, kept as separate SQL
+# text: the milli corpus, the grown geometry, the panel ``qs``, its probed
+# cells, the exact top-5 ``ex`` and the recall rows over hit-count CTEs
+# (q_id, h).
+
+def _milli_sql() -> str:
+    return f"""SELECT vec_id,
+         list_transform({as_double_array_sql('embedding')},
+                        x -> CAST(FLOOR(x * 1000 + 0.5) AS BIGINT)) AS xm
+  FROM embeddings"""
+
+
+def _grown_params_sql(src: str) -> str:
+    """n_cells/n_probe from COUNT(*) — the exact integer twins of
+    auto_cells/auto_probe (IEEE sqrt/log2 are correctly rounded in both
+    engines)."""
+    return f"""
+  SELECT CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) AS n_cells,
+         GREATEST(2, CAST(CEIL(LOG2(CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) + 1))
+                          AS BIGINT)) AS n_probe
+  FROM {src}"""
+
+
+def _panel_sql(src: str, vec: str, qvec: str) -> str:
+    return f"SELECT vec_id AS q_id, {vec} AS {qvec} FROM {src} WHERE vec_id IN {_AUDIT_PANEL}"
+
+
+def _exact_topk_sql(src: str, vec: str, qvec: str, panel: str = "qs") -> str:
+    return f"""
+  SELECT q_id, neighbor_id FROM (
+    SELECT q.q_id, c.vec_id AS neighbor_id,
+           ROW_NUMBER() OVER (PARTITION BY q.q_id
+             ORDER BY {sq_l2_sql(f'c.{vec}', f'q.{qvec}')}, c.vec_id) AS rank
+    FROM {src} c, {panel} q WHERE c.vec_id <> q.q_id) t
+  WHERE rank <= 5"""
+
+
+def _probes_sql(cents: str, qvec: str, cvec: str, n_probe: int | str) -> str:
+    """(q_id, cell): each panel query's ``n_probe`` nearest cells of
+    ``cents`` (cell, <cvec>), ties to the smaller cell id."""
+    return f"""
+  SELECT q_id, cell FROM (
+    SELECT q.q_id, c.cell,
+           ROW_NUMBER() OVER (PARTITION BY q.q_id
+             ORDER BY {sq_l2_sql(f'q.{qvec}', f'c.{cvec}')}, c.cell) AS pr
+    FROM qs q, {cents} c) t
+  WHERE pr <= {n_probe}"""
+
+
+def _hits_sql(approx: str) -> str:
+    """Exact top-5 rows of ``ex`` that the index answer ``approx`` holds."""
+    return f"""SELECT ex.q_id, COUNT(*) AS h
+       FROM ex JOIN {approx} USING (q_id, neighbor_id) GROUP BY ex.q_id"""
+
+
+def _cand_hits_sql(asn: str, probes: str) -> str:
+    """Exact top-5 rows of ``ex`` whose neighbor's cell (``asn``: vec_id,
+    cell) is one of the query's probed cells (``probes``: q_id, cell)."""
+    return f"""SELECT ex.q_id, COUNT(*) AS h
+       FROM ex JOIN {asn} a ON a.vec_id = ex.neighbor_id
+       JOIN {probes} p ON p.q_id = ex.q_id AND p.cell = a.cell
+       GROUP BY ex.q_id"""
+
+
+def _recall_rows_sql(
+    hits: str, cand_hits: str | None = None, variant: str | None = None
+) -> str:
+    """One recall@5 row per panel query from the hit-count CTEs; a query
+    without hits scores 0 (the LEFT JOIN + COALESCE)."""
+    cols = [f"'{variant}' AS variant"] if variant else []
+    cols.append("q.q_id")
+    joins = ""
+    for cte, n_col, r_col in (
+        (cand_hits, "n_cand_hits", "cand_recall"),
+        (hits, "n_hits", "recall_at_5"),
+    ):
+        if cte:
+            cols += [
+                f"CAST(COALESCE({cte}.h, 0) AS BIGINT) AS {n_col}",
+                f"ROUND(COALESCE({cte}.h, 0) / 5.0, 4) AS {r_col}",
+            ]
+            joins += f" LEFT JOIN {cte} USING (q_id)"
+    return f"SELECT {', '.join(cols)}\nFROM qs q{joins}"
+
+
+def _variant_recall_sql(seeded: str, trained: str) -> str:
+    """The seeded-vs-trained audits' final SELECT over two hit CTEs."""
+    return f"""SELECT * FROM (
+{_recall_rows_sql(seeded, variant='seeded')}
+UNION ALL
+{_recall_rows_sql(trained, variant='trained')}) u
+ORDER BY variant, q_id"""
 
 
 def _ann_recall_sql() -> str:
@@ -1082,15 +1203,8 @@ def _ann_recall_sql() -> str:
 
     return f"""
 WITH a AS (SELECT q_id, neighbor_id FROM ({_m(_ivfpq_grown_sql())})),
-e AS (SELECT vec_id,
-             list_transform({as_double_array_sql('embedding')},
-                            x -> CAST(FLOOR(x * 1000 + 0.5) AS BIGINT)) AS xm
-      FROM embeddings),
-params AS (
-  SELECT CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) AS n_cells,
-         GREATEST(2, CAST(CEIL(LOG2(CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) + 1))
-                          AS BIGINT)) AS n_probe
-  FROM e),
+e AS ({_milli_sql()}),
+params AS ({_grown_params_sql('e')}),
 cents AS (
   SELECT vec_id AS cell, xm AS cm
   FROM (SELECT vec_id, xm, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn FROM e)
@@ -1098,35 +1212,12 @@ cents AS (
 asn AS (
   SELECT e.vec_id, MIN({{'d': {sq_l2_sql('e.xm', 'c.cm')}, 'c': c.cell}})['c'] AS cell
   FROM e, cents c GROUP BY e.vec_id),
-qs AS (SELECT vec_id AS q_id, xm AS qm FROM e WHERE vec_id IN (100, 101, 102)),
-probes AS (
-  SELECT q_id, cell FROM (
-    SELECT q.q_id, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY q.q_id
-                              ORDER BY {sq_l2_sql('q.qm', 'c.cm')}, c.cell)
-             AS pr_rank
-    FROM qs q, cents c)
-  WHERE pr_rank <= (SELECT n_probe FROM params)),
-ex AS (
-  SELECT q_id, neighbor_id FROM (
-    SELECT q.q_id, c.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q.q_id
-                              ORDER BY {sq_l2_sql('c.xm', 'q.qm')}, c.vec_id)
-             AS rank
-    FROM e c, qs q WHERE c.vec_id <> q.q_id)
-  WHERE rank <= 5),
-ch AS (SELECT ex.q_id, CAST(COUNT(*) AS BIGINT) AS n_cand
-       FROM ex JOIN asn ON asn.vec_id = ex.neighbor_id
-       JOIN probes p ON p.q_id = ex.q_id AND p.cell = asn.cell
-       GROUP BY ex.q_id),
-h AS (SELECT ex.q_id, CAST(COUNT(*) AS BIGINT) AS n_hits
-      FROM ex JOIN a USING (q_id, neighbor_id) GROUP BY ex.q_id)
-SELECT q.q_id,
-       COALESCE(ch.n_cand, 0) AS n_cand_hits,
-       ROUND(COALESCE(ch.n_cand, 0) / 5.0, 4) AS cand_recall,
-       COALESCE(h.n_hits, 0) AS n_hits,
-       ROUND(COALESCE(h.n_hits, 0) / 5.0, 4) AS recall_at_5
-FROM qs q LEFT JOIN ch USING (q_id) LEFT JOIN h USING (q_id) ORDER BY q_id
+qs AS ({_panel_sql('e', 'xm', 'qm')}),
+probes AS ({_probes_sql('cents', 'qm', 'cm', '(SELECT n_probe FROM params)')}),
+ex AS ({_exact_topk_sql('e', 'xm', 'qm')}),
+ch AS ({_cand_hits_sql('asn', 'probes')}),
+h AS ({_hits_sql('a')})
+{_recall_rows_sql('h', 'ch')} ORDER BY q_id
 """
 
 
@@ -1282,22 +1373,8 @@ def q238_ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = persist_tracked(
         spread(emb).select("vec_id", as_double_array(col("embedding")).alias("v"))
     )
-    q = e.where(col("vec_id").isin(100, 101, 102)).select(
-        col("vec_id").alias("q_id"), col("v").alias("qv")
-    )
-    w = Window.partitionBy("q_id").orderBy(col("d"), col("neighbor_id"))
-    exact = persist_tracked(
-        e.crossJoin(broadcast(q))
-        .where(col("vec_id") != col("q_id"))
-        .select(
-            "q_id",
-            col("vec_id").alias("neighbor_id"),
-            sq_l2(col("v"), col("qv")).alias("d"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(col("rank") <= 5)
-        .select("q_id", "neighbor_id")
-    )
+    q = _panel(e, "v", "qv")
+    exact = _exact_topk(e, q, "v", "qv")
     parts = []
     for variant, cents in (("seeded", c_seed), ("trained", c_train)):
         dists, cells = _centroid_dists(col("v"), cents)
@@ -1321,24 +1398,8 @@ def q238_ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.transform(probe_cells, lambda s: s["c"].cast("long"))
             ).alias("cell"),
         )
-        hits = (
-            exact.join(asn, "neighbor_id")
-            .join(broadcast(probes), ["q_id", "cell"])
-            .groupBy("q_id")
-            .agg(F.count("*").alias("h"))
-        )
-        parts.append(
-            q.select("q_id")
-            .join(hits, "q_id", "left")
-            .select(
-                lit(variant).alias("variant"),
-                "q_id",
-                F.coalesce(col("h"), lit(0)).cast("long").alias("n_hits"),
-                F.round(F.coalesce(col("h"), lit(0)) / lit(5.0), 4).alias(
-                    "recall_at_5"
-                ),
-            )
-        )
+        hits = exact.join(asn, "neighbor_id").join(broadcast(probes), ["q_id", "cell"])
+        parts.append(_recall_rows(q, hits, variant=variant))
     return parts[0].unionByName(parts[1]).orderBy("variant", "q_id")
 
 
@@ -1368,13 +1429,7 @@ def q240_pq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = embedding_dim(emb)
     dsub = dim // _PQ_M
     e = persist_tracked(
-        spread(emb).select(
-            "vec_id",
-            F.transform(
-                as_double_array(col("embedding")),
-                lambda x: F.floor(x * 1000 + lit(0.5)).cast("long"),
-            ).alias("xm"),
-        )
+        spread(emb).select("vec_id", _milli(as_double_array(col("embedding"))).alias("xm"))
     )
     srows = sorted(
         (int(r.vec_id), list(r.xm))
@@ -1447,10 +1502,8 @@ def q240_pq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         cb1.append((np.asarray(ids, dtype=np.int64), mat))
     codes1 = e.mapInPandas(make_encode(cb1), schema=enc_schema)
 
-    qrows = sorted(
-        (int(r.vec_id), list(r.xm))
-        for r in e.where(col("vec_id").isin(100, 101, 102)).collect()
-    )
+    q = _panel(e, "xm", "qm")
+    qrows = sorted((int(r.q_id), list(r.qm)) for r in q.collect())
 
     def lut_table(cbs):
         rows = []
@@ -1470,23 +1523,7 @@ def q240_pq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return spark.createDataFrame(rows, schema)
 
-    q = e.where(col("vec_id").isin(100, 101, 102)).select(
-        col("vec_id").alias("q_id"), col("xm").alias("qm")
-    )
-    w = Window.partitionBy("q_id").orderBy(col("d"), col("neighbor_id"))
-    exact = persist_tracked(
-        e.crossJoin(broadcast(q))
-        .where(col("vec_id") != col("q_id"))
-        .select(
-            "q_id",
-            col("vec_id").alias("neighbor_id"),
-            sq_l2(col("xm"), col("qm")).alias("d"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(col("rank") <= 5)
-        .select("q_id", "neighbor_id")
-    )
-
+    exact = _exact_topk(e, q, "xm", "qm")
     parts = []
     for variant, codes, cbs in (("seeded", codes0, cb0), ("trained", codes1, cb1)):
         adc = None
@@ -1504,23 +1541,8 @@ def q240_pq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(col("rank") <= 5)
             .select("q_id", "neighbor_id")
         )
-        hits = (
-            exact.join(approx, ["q_id", "neighbor_id"])
-            .groupBy("q_id")
-            .agg(F.count("*").alias("h"))
-        )
-        parts.append(
-            q.select("q_id")
-            .join(hits, "q_id", "left")
-            .select(
-                lit(variant).alias("variant"),
-                "q_id",
-                F.coalesce(col("h"), lit(0)).cast("long").alias("n_hits"),
-                F.round(F.coalesce(col("h"), lit(0)) / lit(5.0), 4).alias(
-                    "recall_at_5"
-                ),
-            )
-        )
+        hits = exact.join(approx, ["q_id", "neighbor_id"])
+        parts.append(_recall_rows(q, hits, variant=variant))
     return parts[0].unionByName(parts[1]).orderBy("variant", "q_id")
 
 
@@ -1590,11 +1612,7 @@ def q242_ivf_trained_grown_recall(spark: SparkSession, sf_dir: str) -> DataFrame
     emb = load(spark, sf_dir, "embeddings")
     e = persist_tracked(
         spread(emb, _GEMM_SPREAD_BYTES).select(
-            "vec_id",
-            F.transform(
-                as_double_array(col("embedding")),
-                lambda x: F.floor(x * 1000 + lit(0.5)).cast("long"),
-            ).alias("xm"),
+            "vec_id", _milli(as_double_array(col("embedding"))).alias("xm")
         )
     )
     n = e.count()
@@ -1607,27 +1625,11 @@ def q242_ivf_trained_grown_recall(spark: SparkSession, sf_dir: str) -> DataFrame
     ids0, C0, sq0 = _seed_matrix(seeds, quantize=False)
     ids2, C2, sq2 = _lloyd_milli(e, ids0, C0, sq0, iters=2)
 
-    q = e.where(col("vec_id").isin(100, 101, 102)).select(
-        col("vec_id").alias("q_id"), col("xm").alias("qm")
-    )
-    w = Window.partitionBy("q_id").orderBy(col("d"), col("neighbor_id"))
-    exact = persist_tracked(
-        e.crossJoin(broadcast(q))
-        .where(col("vec_id") != col("q_id"))
-        .select(
-            "q_id",
-            col("vec_id").alias("neighbor_id"),
-            sq_l2(col("xm"), col("qm")).alias("d"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(col("rank") <= 5)
-        .select("q_id", "neighbor_id")
-    )
+    q = _panel(e, "xm", "qm")
+    exact = _exact_topk(e, q, "xm", "qm")
     import numpy as np
 
-    qrows = sorted(
-        (int(r.q_id), list(r.qm)) for r in q.collect()
-    )
+    qrows = sorted((int(r.q_id), list(r.qm)) for r in q.collect())
     parts = []
     for variant, (ids, C, csq) in (
         ("seeded", (ids0, C0, sq0)),
@@ -1643,24 +1645,8 @@ def q242_ivf_trained_grown_recall(spark: SparkSession, sf_dir: str) -> DataFrame
             for ci in np.lexsort((ids, dq))[:n_probe]:
                 probe_rows.append((q_id, int(ids[ci])))
         probes = spark.createDataFrame(probe_rows, "q_id long, cell long")
-        hits = (
-            exact.join(asn, "neighbor_id")
-            .join(broadcast(probes), ["q_id", "cell"])
-            .groupBy("q_id")
-            .agg(F.count("*").alias("h"))
-        )
-        parts.append(
-            q.select("q_id")
-            .join(hits, "q_id", "left")
-            .select(
-                lit(variant).alias("variant"),
-                "q_id",
-                F.coalesce(col("h"), lit(0)).cast("long").alias("n_hits"),
-                F.round(F.coalesce(col("h"), lit(0)) / lit(5.0), 4).alias(
-                    "recall_at_5"
-                ),
-            )
-        )
+        hits = exact.join(asn, "neighbor_id").join(broadcast(probes), ["q_id", "cell"])
+        parts.append(_recall_rows(q, hits, variant=variant))
     return parts[0].unionByName(parts[1]).orderBy("variant", "q_id")
 
 
@@ -2199,7 +2185,7 @@ def q227_reduced_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     qrows = sorted(
         (int(r.vec_id), list(r.rv))
-        for r in red.where(col("vec_id").isin(100, 101, 102)).collect()
+        for r in red.where(col("vec_id").isin(*_AUDIT_PANEL)).collect()
     )
     probe_rows, q_rows = [], []
     for q_id, qrv in qrows:
@@ -2228,58 +2214,17 @@ def q227_reduced_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # Full-space exact 5-NN ground truth (q222's milli metric, verbatim).
-    emb = load(spark, sf_dir, "embeddings")
-    e = spread(emb).select(
-        "vec_id",
-        F.transform(
-            as_double_array(col("embedding")),
-            lambda x: F.floor(x * 1000 + lit(0.5)).cast("long"),
-        ).alias("xm"),
+    e = spread(load(spark, sf_dir, "embeddings")).select(
+        "vec_id", _milli(as_double_array(col("embedding"))).alias("xm")
     )
-    q = e.where(col("vec_id").isin(100, 101, 102)).select(
-        col("vec_id").alias("q_id"), col("xm").alias("qm")
-    )
-    we = Window.partitionBy("q_id").orderBy(col("d"), col("neighbor_id"))
-    exact = persist_tracked(
-        e.crossJoin(broadcast(q))
-        .where(col("vec_id") != col("q_id"))
-        .select(
-            "q_id",
-            col("vec_id").alias("neighbor_id"),
-            sq_l2(col("xm"), col("qm")).alias("d"),
-        )
-        .withColumn("rank", F.row_number().over(we))
-        .where(col("rank") <= 5)
-        .select("q_id", "neighbor_id")
-    )
-    cand_hits = (
-        exact.join(
-            asg.select(col("vec_id").alias("neighbor_id"), "cell"), "neighbor_id"
-        )
-        .join(broadcast(probe_pairs), ["q_id", "cell"])
-        .groupBy("q_id")
-        .agg(F.count("*").alias("ch"))
-    )
-    hits = (
-        exact.join(approx, ["q_id", "neighbor_id"])
-        .groupBy("q_id")
-        .agg(F.count("*").alias("h"))
-    )
-    return (
-        q.select("q_id")
-        .join(cand_hits, "q_id", "left")
-        .join(hits, "q_id", "left")
-        .select(
-            "q_id",
-            F.coalesce(col("ch"), lit(0)).cast("long").alias("n_cand_hits"),
-            F.round(F.coalesce(col("ch"), lit(0)) / lit(5.0), 4).alias(
-                "cand_recall"
-            ),
-            F.coalesce(col("h"), lit(0)).cast("long").alias("n_hits"),
-            F.round(F.coalesce(col("h"), lit(0)) / lit(5.0), 4).alias("recall_at_5"),
-        )
-        .orderBy("q_id")
-    )
+    q = _panel(e, "xm", "qm")
+    exact = _exact_topk(e, q, "xm", "qm")
+    asn = asg.select(col("vec_id").alias("neighbor_id"), "cell")
+    return _recall_rows(
+        q,
+        exact.join(approx, ["q_id", "neighbor_id"]),
+        exact.join(asn, "neighbor_id").join(broadcast(probe_pairs), ["q_id", "cell"]),
+    ).orderBy("q_id")
 
 
 def _pca_topk_ctes() -> str:
@@ -2351,11 +2296,7 @@ cov1 AS MATERIALIZED (SELECT i, j, cov_m2 AS cov FROM ut
 # milli-of-unit-component quantized coordinate).
 def _pca_reduced_ctes() -> str:
     return f"""{_pca_topk_ctes()},
-em AS MATERIALIZED (
-  SELECT vec_id,
-         list_transform({as_double_array_sql('embedding')},
-                        x -> CAST(FLOOR(x * 1000 + 0.5) AS BIGINT)) AS xm
-  FROM embeddings),
+em AS MATERIALIZED ({_milli_sql()}),
 rvp AS (
   SELECT em.vec_id, comp.c,
          CAST(SUM(em.xm[comp.i + 1] * comp.v) AS BIGINT) AS r
@@ -2390,11 +2331,7 @@ def _reduced_recall_sql() -> str:
     return f"""
 WITH {_pca_reduced_ctes()},
 rl AS MATERIALIZED (SELECT vec_id, list(rm ORDER BY c) AS rv FROM rmt GROUP BY 1),
-params AS (
-  SELECT CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) AS n_cells,
-         GREATEST(2, CAST(CEIL(LOG2(CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) + 1))
-                          AS BIGINT)) AS n_probe
-  FROM rl),
+params AS ({_grown_params_sql('rl')}),
 cents AS MATERIALIZED (
   SELECT vec_id AS cell, rv AS cm
   FROM (SELECT vec_id, rv, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn FROM rl)
@@ -2403,15 +2340,9 @@ asn AS MATERIALIZED (
   SELECT rl.vec_id,
          MIN({{'d': {sq_l2_sql('rl.rv', 'c.cm')}, 'c': c.cell}})['c'] AS cell
   FROM rl, cents c GROUP BY rl.vec_id),
-qs AS (SELECT vec_id AS q_id, rv FROM rl WHERE vec_id IN (100, 101, 102)),
+qs AS ({_panel_sql('rl', 'rv', 'rv')}),
 probes AS MATERIALIZED (
-  SELECT q_id, cell FROM (
-    SELECT q.q_id, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY q.q_id
-                              ORDER BY {sq_l2_sql('q.rv', 'c.cm')}, c.cell)
-             AS pr
-    FROM qs q, cents c)
-  WHERE pr <= (SELECT n_probe FROM params)),
+  {_probes_sql('cents', 'rv', 'cm', '(SELECT n_probe FROM params)')}),
 ap AS (
   SELECT q_id, neighbor_id FROM (
     SELECT p.q_id, a.vec_id AS neighbor_id,
@@ -2424,28 +2355,11 @@ ap AS (
     JOIN qs q ON q.q_id = p.q_id
     WHERE a.vec_id <> p.q_id)
   WHERE rank <= 5),
-ex AS MATERIALIZED (
-  SELECT q_id, neighbor_id FROM (
-    SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                              ORDER BY {sq_l2_sql('c.xm', 'q.xm')}, c.vec_id)
-             AS rank
-    FROM em c, (SELECT vec_id, xm FROM em WHERE vec_id IN (100, 101, 102)) q
-    WHERE c.vec_id <> q.vec_id)
-  WHERE rank <= 5),
-ch AS (SELECT ex.q_id, CAST(COUNT(*) AS BIGINT) AS n_cand
-       FROM ex JOIN asn ON asn.vec_id = ex.neighbor_id
-       JOIN probes p ON p.q_id = ex.q_id AND p.cell = asn.cell
-       GROUP BY ex.q_id),
-h AS (SELECT ex.q_id, CAST(COUNT(*) AS BIGINT) AS n_hits
-      FROM ex JOIN ap USING (q_id, neighbor_id) GROUP BY ex.q_id)
-SELECT q.q_id,
-       COALESCE(ch.n_cand, 0) AS n_cand_hits,
-       ROUND(COALESCE(ch.n_cand, 0) / 5.0, 4) AS cand_recall,
-       COALESCE(h.n_hits, 0) AS n_hits,
-       ROUND(COALESCE(h.n_hits, 0) / 5.0, 4) AS recall_at_5
-FROM (SELECT q_id FROM qs) q
-LEFT JOIN ch USING (q_id) LEFT JOIN h USING (q_id) ORDER BY q_id
+qx AS ({_panel_sql('em', 'xm', 'qm')}),
+ex AS MATERIALIZED ({_exact_topk_sql('em', 'xm', 'qm', panel='qx')}),
+ch AS ({_cand_hits_sql('asn', 'probes')}),
+h AS ({_hits_sql('ap')})
+{_recall_rows_sql('h', 'ch')} ORDER BY q_id
 """
 
 
@@ -2566,7 +2480,7 @@ codes AS (
 luts AS (
   SELECT q.vec_id AS q_id, s.k,
          {lut_cols}
-  FROM e q, seeds s, dims WHERE q.vec_id IN (100, 101, 102)),
+  FROM e q, seeds s, dims WHERE q.vec_id IN {_AUDIT_PANEL}),
 qs AS (SELECT DISTINCT q_id FROM luts),
 cand AS (
   SELECT qs.q_id, c.vec_id AS neighbor_id, {adc} AS adc_raw
@@ -2624,10 +2538,7 @@ def _pq_trained_sql() -> str:
     )
     return f"""
 WITH dims AS (SELECT len(embedding) // {_PQ_M} AS dsub FROM embeddings LIMIT 1),
-e AS (SELECT vec_id,
-             list_transform({as_double_array_sql('embedding')},
-                            x -> CAST(FLOOR(x * 1000 + 0.5) AS BIGINT)) AS xm
-      FROM embeddings),
+e AS ({_milli_sql()}),
 s AS (SELECT rn - 1 AS k, xm
       FROM (SELECT vec_id, xm, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
             FROM e) t
@@ -2651,20 +2562,14 @@ codes1 AS (
   SELECT e.vec_id,
          {code1_aggs}
   FROM e, cw b, dims GROUP BY e.vec_id),
-qs AS (SELECT vec_id AS q_id, xm AS qm FROM e WHERE vec_id IN (100, 101, 102)),
+qs AS ({_panel_sql('e', 'xm', 'qm')}),
 l0 AS (SELECT q.q_id, s.k,
          {lut0_cols}
        FROM qs q, s, dims),
 l1 AS (SELECT q.q_id, b.m, b.k,
          {sq_l2_sql(qslice, 'b.cv')} AS d
        FROM qs q, cw b, dims),
-ex AS (
-  SELECT q_id, neighbor_id FROM (
-    SELECT q.q_id, c.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q.q_id
-             ORDER BY {sq_l2_sql('c.xm', 'q.qm')}, c.vec_id) AS rank
-    FROM e c, qs q WHERE c.vec_id <> q.q_id) t
-  WHERE rank <= 5),
+ex AS ({_exact_topk_sql('e', 'xm', 'qm')}),
 a0 AS (
   SELECT q_id, neighbor_id FROM (
     SELECT qs.q_id, c.vec_id AS neighbor_id,
@@ -2683,21 +2588,9 @@ a1 AS (
     {joins1}
     WHERE c.vec_id <> qs.q_id) t
   WHERE rank <= 5),
-h0 AS (SELECT ex.q_id, COUNT(*) AS h FROM ex JOIN a0 USING (q_id, neighbor_id)
-       GROUP BY ex.q_id),
-h1 AS (SELECT ex.q_id, COUNT(*) AS h FROM ex JOIN a1 USING (q_id, neighbor_id)
-       GROUP BY ex.q_id)
-SELECT variant, q_id, n_hits, recall_at_5 FROM (
-  SELECT 'seeded' AS variant, q.q_id,
-         CAST(COALESCE(h, 0) AS BIGINT) AS n_hits,
-         ROUND(COALESCE(h, 0) / 5.0, 4) AS recall_at_5
-  FROM qs q LEFT JOIN h0 USING (q_id)
-  UNION ALL
-  SELECT 'trained' AS variant, q.q_id,
-         CAST(COALESCE(h, 0) AS BIGINT) AS n_hits,
-         ROUND(COALESCE(h, 0) / 5.0, 4) AS recall_at_5
-  FROM qs q LEFT JOIN h1 USING (q_id)) u
-ORDER BY variant, q_id
+h0 AS ({_hits_sql('a0')}),
+h1 AS ({_hits_sql('a1')})
+{_variant_recall_sql('h0', 'h1')}
 """
 
 
@@ -2740,7 +2633,7 @@ codes AS (
   SELECT r.vec_id, r.cell,
          {code_aggs}
   FROM res r, seeds s, dims GROUP BY r.vec_id, r.cell),
-qs AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id IN (100, 101, 102)),
+qs AS ({_panel_sql('e', 'v', 'qv')}),
 pr AS (
   SELECT q.q_id, c.cell, c.cv,
          ROW_NUMBER() OVER (PARTITION BY q.q_id
@@ -2799,15 +2692,8 @@ def _ivfpq_grown_sql(k: int = 5) -> str:
     )
     return f"""
 WITH dims AS (SELECT len(embedding) // {_PQ_M} AS dsub FROM embeddings LIMIT 1),
-e AS (SELECT vec_id,
-             list_transform({as_double_array_sql('embedding')},
-                            x -> CAST(FLOOR(x * 1000 + 0.5) AS BIGINT)) AS xm
-      FROM embeddings),
-params AS (
-  SELECT CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) AS n_cells,
-         GREATEST(2, CAST(CEIL(LOG2(CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) + 1))
-                          AS BIGINT)) AS n_probe
-  FROM e),
+e AS ({_milli_sql()}),
+params AS ({_grown_params_sql('e')}),
 cents AS (
   SELECT vec_id AS cell, xm AS cm
   FROM (SELECT vec_id, xm, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn FROM e)
@@ -2824,7 +2710,7 @@ codes AS (
   SELECT r.vec_id, r.cell,
          {code_aggs}
   FROM res r, seeds s, dims GROUP BY r.vec_id, r.cell),
-qs AS (SELECT vec_id AS q_id, xm AS qm FROM e WHERE vec_id IN (100, 101, 102)),
+qs AS ({_panel_sql('e', 'xm', 'qm')}),
 pr AS (
   SELECT q.q_id, c.cell, c.cm,
          ROW_NUMBER() OVER (PARTITION BY q.q_id
@@ -3305,9 +3191,9 @@ def q232_int8_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest(F.round(x / s), lit(-127.0)), lit(127.0)
         ).cast("long"),
     )
-    xm = F.transform(col("v"), lambda x: F.floor(x * 1000 + lit(0.5)).cast("long"))
+    xm = _milli(col("v"))
     coded = persist_tracked(e.select("vec_id", q8.alias("q8"), xm.alias("xm")))
-    q = coded.where(col("vec_id").isin(100, 101, 102)).select(
+    q = coded.where(col("vec_id").isin(*_AUDIT_PANEL)).select(
         col("vec_id").alias("q_id"),
         col("q8").alias("qq8"),
         col("xm").alias("qm"),
@@ -3358,7 +3244,7 @@ coded AS (
          list_transform(v, x -> CAST(FLOOR(x * 1000 + 0.5) AS BIGINT)) AS xm
   FROM e CROSS JOIN sl),
 qs AS (SELECT vec_id AS q_id, q8 AS qq8, xm AS qm
-       FROM coded WHERE vec_id IN (100, 101, 102)),
+       FROM coded WHERE vec_id IN {_AUDIT_PANEL}),
 pairs AS (
   SELECT q.q_id, c.vec_id AS neighbor_id,
          {sq_l2_sql('c.q8', 'q.qq8')} AS d8,
@@ -3428,7 +3314,7 @@ a AS (
            ROW_NUMBER() OVER (PARTITION BY e.vec_id
              ORDER BY {sq_l2_sql('e.v', 'c.cv')}, c.cell) AS rn
     FROM e, c) t WHERE rn = 1),
-q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id IN (100, 101, 102)),
+q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id IN {_AUDIT_PANEL}),
 p AS (
   SELECT q_id, qv, cell FROM (
     SELECT q.q_id, q.qv, c.cell,
@@ -3548,51 +3434,19 @@ c2 AS (
     SELECT cell, i, ROUND(AVG(v[i]), 4) AS mean_x
     FROM a2, UNNEST(range(1, len(v) + 1)) AS t(i) GROUP BY cell, i)
   GROUP BY cell),
-qs AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id IN (100, 101, 102)),
-ex AS (
-  SELECT q_id, neighbor_id FROM (
-    SELECT q.q_id, c.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q.q_id
-             ORDER BY {sq_l2_sql('c.v', 'q.qv')}, c.vec_id) AS rank
-    FROM e c, qs q WHERE c.vec_id <> q.q_id) t
-  WHERE rank <= 5),
+qs AS ({_panel_sql('e', 'v', 'qv')}),
+ex AS ({_exact_topk_sql('e', 'v', 'qv')}),
 asn_t AS (
-  SELECT vec_id AS neighbor_id, cell FROM (
+  SELECT vec_id, cell FROM (
     SELECT e.vec_id, c2.cell,
            ROW_NUMBER() OVER (PARTITION BY e.vec_id
              ORDER BY {sq_l2_sql('e.v', 'c2.cv')}, c2.cell) AS rn
     FROM e, c2) t WHERE rn = 1),
-pr_s AS (
-  SELECT q_id, cell FROM (
-    SELECT q.q_id, c0.cell,
-           ROW_NUMBER() OVER (PARTITION BY q.q_id
-             ORDER BY {sq_l2_sql('q.qv', 'c0.cv')}, c0.cell) AS pr
-    FROM qs q, c0) t WHERE pr <= {_IVF_PROBE}),
-pr_t AS (
-  SELECT q_id, cell FROM (
-    SELECT q.q_id, c2.cell,
-           ROW_NUMBER() OVER (PARTITION BY q.q_id
-             ORDER BY {sq_l2_sql('q.qv', 'c2.cv')}, c2.cell) AS pr
-    FROM qs q, c2) t WHERE pr <= {_IVF_PROBE}),
-h_s AS (
-  SELECT ex.q_id, COUNT(*) AS h
-  FROM ex JOIN (SELECT vec_id AS neighbor_id, cell FROM a1) a USING (neighbor_id)
-  JOIN pr_s p ON p.q_id = ex.q_id AND p.cell = a.cell GROUP BY ex.q_id),
-h_t AS (
-  SELECT ex.q_id, COUNT(*) AS h
-  FROM ex JOIN asn_t a USING (neighbor_id)
-  JOIN pr_t p ON p.q_id = ex.q_id AND p.cell = a.cell GROUP BY ex.q_id)
-SELECT variant, q_id, n_hits, recall_at_5 FROM (
-  SELECT 'seeded' AS variant, q.q_id,
-         CAST(COALESCE(h, 0) AS BIGINT) AS n_hits,
-         ROUND(COALESCE(h, 0) / 5.0, 4) AS recall_at_5
-  FROM qs q LEFT JOIN h_s USING (q_id)
-  UNION ALL
-  SELECT 'trained' AS variant, q.q_id,
-         CAST(COALESCE(h, 0) AS BIGINT) AS n_hits,
-         ROUND(COALESCE(h, 0) / 5.0, 4) AS recall_at_5
-  FROM qs q LEFT JOIN h_t USING (q_id)) u
-ORDER BY variant, q_id
+pr_s AS ({_probes_sql('c0', 'qv', 'cv', _IVF_PROBE)}),
+pr_t AS ({_probes_sql('c2', 'qv', 'cv', _IVF_PROBE)}),
+h_s AS ({_cand_hits_sql('a1', 'pr_s')}),
+h_t AS ({_cand_hits_sql('asn_t', 'pr_t')})
+{_variant_recall_sql('h_s', 'h_t')}
 """,
 }
 
@@ -3630,26 +3484,9 @@ def _ivf_trained_grown_sql() -> str:
          UNNEST(range(1, len(e.xm) + 1)) AS t(i)
     GROUP BY a.cell, t.i) GROUP BY cell"""
 
-    def probes(cents: str) -> str:
-        return f"""
-  SELECT q_id, cell FROM (
-    SELECT q.q_id, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY q.q_id
-             ORDER BY {sq_l2_sql('q.qm', 'c.cm')}, c.cell) AS pr
-    FROM qs q, {cents} c) t
-  WHERE pr <= (SELECT n_probe FROM params)"""
-
     return f"""
-WITH e AS (SELECT vec_id,
-                  list_transform({as_double_array_sql('embedding')},
-                                 x -> CAST(FLOOR(x * 1000 + 0.5) AS BIGINT))
-                    AS xm
-           FROM embeddings),
-params AS (
-  SELECT CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) AS n_cells,
-         GREATEST(2, CAST(CEIL(LOG2(CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) + 1))
-                          AS BIGINT)) AS n_probe
-  FROM e),
+WITH e AS ({_milli_sql()}),
+params AS ({_grown_params_sql('e')}),
 c0 AS (
   SELECT vec_id AS cell, xm AS cm
   FROM (SELECT vec_id, xm, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn FROM e)
@@ -3659,35 +3496,13 @@ c1 AS ({means('a1')}),
 a2 AS ({asn('e', 'c1')}),
 c2 AS ({means('a2')}),
 a3 AS ({asn('e', 'c2')}),
-qs AS (SELECT vec_id AS q_id, xm AS qm FROM e WHERE vec_id IN (100, 101, 102)),
-ex AS (
-  SELECT q_id, neighbor_id FROM (
-    SELECT q.q_id, c.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q.q_id
-             ORDER BY {sq_l2_sql('c.xm', 'q.qm')}, c.vec_id) AS rank
-    FROM e c, qs q WHERE c.vec_id <> q.q_id) t
-  WHERE rank <= 5),
-pr_s AS ({probes('c0')}),
-pr_t AS ({probes('c2')}),
-h_s AS (
-  SELECT ex.q_id, COUNT(*) AS h
-  FROM ex JOIN (SELECT vec_id AS neighbor_id, cell FROM a1) a USING (neighbor_id)
-  JOIN pr_s p ON p.q_id = ex.q_id AND p.cell = a.cell GROUP BY ex.q_id),
-h_t AS (
-  SELECT ex.q_id, COUNT(*) AS h
-  FROM ex JOIN (SELECT vec_id AS neighbor_id, cell FROM a3) a USING (neighbor_id)
-  JOIN pr_t p ON p.q_id = ex.q_id AND p.cell = a.cell GROUP BY ex.q_id)
-SELECT variant, q_id, n_hits, recall_at_5 FROM (
-  SELECT 'seeded' AS variant, q.q_id,
-         CAST(COALESCE(h, 0) AS BIGINT) AS n_hits,
-         ROUND(COALESCE(h, 0) / 5.0, 4) AS recall_at_5
-  FROM qs q LEFT JOIN h_s USING (q_id)
-  UNION ALL
-  SELECT 'trained' AS variant, q.q_id,
-         CAST(COALESCE(h, 0) AS BIGINT) AS n_hits,
-         ROUND(COALESCE(h, 0) / 5.0, 4) AS recall_at_5
-  FROM qs q LEFT JOIN h_t USING (q_id)) u
-ORDER BY variant, q_id
+qs AS ({_panel_sql('e', 'xm', 'qm')}),
+ex AS ({_exact_topk_sql('e', 'xm', 'qm')}),
+pr_s AS ({_probes_sql('c0', 'qm', 'cm', '(SELECT n_probe FROM params)')}),
+pr_t AS ({_probes_sql('c2', 'qm', 'cm', '(SELECT n_probe FROM params)')}),
+h_s AS ({_cand_hits_sql('a1', 'pr_s')}),
+h_t AS ({_cand_hits_sql('a3', 'pr_t')})
+{_variant_recall_sql('h_s', 'h_t')}
 """
 
 

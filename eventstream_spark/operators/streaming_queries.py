@@ -284,8 +284,8 @@ def q132_stream_vector_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    from ..functions import as_double_array, dot, matrix_literal
-    from .similarity import _N_PLANES, embedding_dim, plane_weights
+    from ..functions import as_double_array
+    from .similarity import _N_PLANES, _plane_bucket, embedding_dim, plane_weights
 
     schema = StructType(
         [
@@ -303,15 +303,7 @@ def q132_stream_vector_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whatever corpus is landing, never a fixture constant.
     dim = embedding_dim(spark.read.schema(schema).parquet(d))
     planes = plane_weights(_N_PLANES, dim)
-    v = as_double_array(col("embedding"))
-    pmat = matrix_literal(planes)
-    powers = F.array(*[F.lit(1 << j) for j in range(len(planes))])
-    projections = F.transform(pmat, lambda w: dot(v, w))
-    bucket = F.aggregate(
-        F.zip_with(projections, powers, lambda x, p: F.when(x >= 0, p).otherwise(F.lit(0))),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ).cast("long")
+    _, bucket = _plane_bucket(as_double_array(col("embedding")), planes)
     agg = emb.select(bucket.alias("bucket")).groupBy("bucket").agg(
         F.count("*").alias("n_vectors")
     )

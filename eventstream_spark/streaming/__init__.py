@@ -14,7 +14,6 @@ batch DataFrame and a streaming one; the streaming≡batch test harness
 from .windows import session_counts, sliding_counts, tumbling_counts
 from .dedup import dedup_events
 from .barrier import completion_barrier, barrier_batch_oracle
-from .barrier_tws import ROCKSDB_PROVIDER, completion_barrier_tws
 from .control import (
     QueryInfo,
     QueryManager,
@@ -33,8 +32,6 @@ __all__ = [
     "session_counts",
     "dedup_events",
     "completion_barrier",
-    "completion_barrier_tws",
-    "ROCKSDB_PROVIDER",
     "barrier_batch_oracle",
     "QueryManager",
     "QueryInfo",

@@ -1798,3 +1798,38 @@ def test_spread_bytes_aware_fanout(spark):
     # row sets identical under every policy
     base = sorted(r.vec_id for r in emb.select("vec_id").collect())
     assert sorted(r.vec_id for r in small.select("vec_id").collect()) == base
+
+
+def test_recall_rows_keep_zero_hit_queries(spark):
+    """The recall-audit scorer keeps every panel query: a query the index
+    misses entirely comes back as a zero row (n_hits = 0, recall_at_5 =
+    0.0, and n_cand_hits = 0 in the two-layer shape), never as a missing
+    row — also when the hit table is empty."""
+    from eventstream_spark.operators.similarity import _recall_rows
+
+    panel = spark.createDataFrame([(100,), (101,), (102,)], "q_id long")
+    pairs = "q_id long, neighbor_id long"
+    hits = spark.createDataFrame([(100, 1), (100, 2), (101, 3)], pairs)
+    cand = spark.createDataFrame([(100, 1), (100, 2), (100, 4), (101, 3)], pairs)
+
+    two = _recall_rows(panel, hits, cand).orderBy("q_id")
+    assert two.columns == [
+        "q_id", "n_cand_hits", "cand_recall", "n_hits", "recall_at_5"
+    ]
+    assert [tuple(r) for r in two.collect()] == [
+        (100, 3, 0.6, 2, 0.4),
+        (101, 1, 0.2, 1, 0.2),
+        (102, 0, 0.0, 0, 0.0),
+    ]
+
+    one = _recall_rows(panel, hits, variant="seeded").orderBy("q_id")
+    assert one.columns == ["variant", "q_id", "n_hits", "recall_at_5"]
+    assert [tuple(r) for r in one.collect()] == [
+        ("seeded", 100, 2, 0.4),
+        ("seeded", 101, 1, 0.2),
+        ("seeded", 102, 0, 0.0),
+    ]
+
+    none = spark.createDataFrame([], pairs)
+    got = _recall_rows(panel, none, none).orderBy("q_id").collect()
+    assert [tuple(r) for r in got] == [(q, 0, 0.0, 0, 0.0) for q in (100, 101, 102)]
