@@ -62,6 +62,16 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def _pin_session(spark: SparkSession) -> None:
+    """Determinism contract (FIXTURES.md): tz-naive fixture timestamps must
+    be interpreted identically in both engines, so pin the session to UTC
+    even when the caller's session (e.g. the driver's) didn't. The one place
+    the package writes these confs at run time; ``load`` (batch) and
+    ``sources.stream.file_stream`` (streaming) both call it."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table. Plain parquet scan — column pruning and predicate
     pushdown are left to Catalyst (verify via .explain: PushedFilters).
@@ -73,19 +83,16 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     legacy TIMESTAMP(NANOS) fixtures still read (as int64, floor-converted
     by the same helper).
     """
-    # Determinism contract (FIXTURES.md): tz-naive fixture timestamps must be
-    # interpreted identically in both engines, so pin the session to UTC even
-    # when the caller's session (e.g. the driver's) didn't. Conf writes and
-    # the footer-reading spark.read are memoized per session — a plain read
-    # costs ~0.1 s of driver time, and suites load the same tables hundreds
-    # of times. DataFrames are immutable plans, so sharing one is safe; the
-    # fixture directories are read-only, so the plan never goes stale.
+    # The session pin and the footer-reading spark.read are memoized per
+    # session — a plain read costs ~0.1 s of driver time, and suites load the
+    # same tables hundreds of times. DataFrames are immutable plans, so
+    # sharing one is safe; the fixture directories are read-only, so the
+    # plan never goes stale.
     cache = getattr(spark, "_eventstream_table_cache", None)
     if cache is None:
         cache = {}
         spark._eventstream_table_cache = cache
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        _pin_session(spark)
     key = (sf_dir, name)
     df = cache.get(key)
     if df is None:

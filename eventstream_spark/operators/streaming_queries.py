@@ -28,12 +28,13 @@ import uuid
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import col, lit
+from pyspark.sql.types import StructType
 
-from ..catalog import EVENTS_RAW_SCHEMA, fix_nanos_ts
+from ..catalog import EVENTS_RAW_SCHEMA, load
 from ..sources.stream import file_stream
 
 
-def _link_table(sf_dir: str, table: str, prefix: str) -> str:
+def _link_table(sf_dir: str, table: str) -> str:
     """Stage ``sf_dir/<table>.parquet`` into a landing directory the file
     source can tail (read-only fixture untouched). A single-file fixture
     symlinks as one file; a Spark-WRITTEN dataset (a directory of part
@@ -47,7 +48,7 @@ def _link_table(sf_dir: str, table: str, prefix: str) -> str:
     sf_dir = os.path.abspath(sf_dir)
     src = os.path.join(sf_dir, f"{table}.parquet")
     tag = sf_dir.strip("/").replace("/", "_")
-    d = os.path.join(tempfile.gettempdir(), f"{prefix}_{tag}")
+    d = os.path.join(tempfile.gettempdir(), f"es_{table}_stream_{tag}")
     os.makedirs(d, exist_ok=True)
     # prune symlinks whose target was rewritten/removed (a rebuilt scale
     # dataset leaves stale part-file names behind otherwise)
@@ -106,22 +107,23 @@ def _max_files() -> int | None:
     return n
 
 
-def _events_stream_dir(sf_dir: str) -> str:
-    return _link_table(sf_dir, "events", "es_stream")
+def _fixture_schema(spark: SparkSession, sf_dir: str, table: str) -> StructType:
+    """The one stream schema per fixture table: events declare the raw
+    (timestamp_ntz) schema ``file_stream``'s ts fix expects; every other
+    table streams with the schema of its own parquet footer, read once
+    through ``catalog.load``'s memoized scan."""
+    if table == "events":
+        return EVENTS_RAW_SCHEMA
+    return load(spark, sf_dir, table).schema
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Same determinism pinning catalog.load applies: the driver's session is
-    # vanilla, and this path never goes through the batch catalog.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return fix_nanos_ts(
-        file_stream(
-            spark,
-            _events_stream_dir(sf_dir),
-            EVENTS_RAW_SCHEMA,
-            max_files_per_trigger=_max_files(),
-        )
+def _table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """``sf_dir/<table>.parquet`` as a file stream over its landing dir."""
+    return file_stream(
+        spark,
+        _link_table(sf_dir, table),
+        _fixture_schema(spark, sf_dir, table),
+        max_files_per_trigger=_max_files(),
     )
 
 
@@ -192,25 +194,6 @@ def _run_to_table(agg: DataFrame, spark: SparkSession, mode: str = "complete") -
     return spark.table(name)
 
 
-def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents.parquet as a file stream (same symlink-landing-zone trick
-    as the events stream)."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-            StructField("source", StringType()),
-            StructField("n_chars", LongType()),
-        ]
-    )
-    d = _link_table(sf_dir, "documents", "es_docstream")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return file_stream(spark, d, schema, max_files_per_trigger=_max_files())
-
-
 def q128_stream_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus-cleaning front door as a REAL streaming pipeline:
     documents land as files, each micro-batch scores quality (q31's exact
@@ -224,7 +207,7 @@ def q128_stream_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text import _BLOCKLIST, quality_score
     from ..functions import tokens
 
-    docs = _documents_stream(spark, sf_dir)
+    docs = _table_stream(spark, sf_dir, "documents")
     nb = F.size(F.filter(tokens("text"), lambda t: t.isin(*_BLOCKLIST)))
     scored = docs.select(
         "source", "n_chars", quality_score().alias("q"), nb.alias("nb")
@@ -249,13 +232,11 @@ def q135_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     batch and AQE-sized — broadcast here, shuffle at 100 TB with the
     corpus bucketed on the fingerprint), so no watermark is needed; the
     only stateful op is the final per-source rollup."""
-    from ..catalog import load
-
     docs_static = load(spark, sf_dir, "documents")
     corpus = docs_static.where(~(col("doc_id") % 10 == 9)).select(
         F.md5("text").alias("fp")
     ).distinct()
-    stream = _documents_stream(spark, sf_dir).where(col("doc_id") % 10 == 9)
+    stream = _table_stream(spark, sf_dir, "documents").where(col("doc_id") % 10 == 9)
     delta = stream.select("source", "n_chars", F.md5("text").alias("fp"))
     novel = delta.join(corpus, "fp", "left_anti")
     agg = novel.groupBy("source").agg(
@@ -275,27 +256,11 @@ def q132_stream_vector_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus: bucketing is embarrassingly parallel at ingest, so index
     build cost rides the write path instead of a later global job.
     Complete mode over the drained source ≡ the batch computation."""
-    from pyspark.sql.types import (
-        ArrayType,
-        FloatType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     from ..functions import as_double_array
     from .similarity import _N_PLANES, _plane_bucket, embedding_dim, plane_weights
 
-    schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("embedding", ArrayType(FloatType())),
-            StructField("label", IntegerType()),
-        ]
-    )
-    d = _link_table(sf_dir, "embeddings", "es_vecstream")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    d = _link_table(sf_dir, "embeddings")
+    schema = _fixture_schema(spark, sf_dir, "embeddings")
     emb = file_stream(spark, d, schema, max_files_per_trigger=_max_files())
 
     # Dim derives from a one-row BATCH read of the same landing dir at
@@ -313,7 +278,7 @@ def q132_stream_vector_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q90_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q21's tumbling-window aggregation as a genuine streaming query."""
-    ev = _events_stream(spark, sf_dir)
+    ev = _table_stream(spark, sf_dir, "events")
     agg = ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
         F.count("*").alias("cnt"), F.sum("value").alias("sv")
     )
@@ -334,7 +299,7 @@ def q167_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained availableNow run hash-matches q164's batch oracle verbatim.
     This is the streaming form a live candlestick feed actually runs:
     per-window state is one (key, o/h/l/c/n/vol) tuple, never the rows."""
-    ev = _events_stream(spark, sf_dir)
+    ev = _table_stream(spark, sf_dir, "events")
     key = F.struct(col("ts"), col("event_id"))
     agg = ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
         F.count("*").alias("n"),
@@ -360,7 +325,7 @@ def q167_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q91_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q22's dedup-count as streaming dropDuplicates feeding a streaming
     aggregation (two chained stateful operators)."""
-    ev = _events_stream(spark, sf_dir)
+    ev = _table_stream(spark, sf_dir, "events")
     deduped = ev.dropDuplicates(["user_id", "event_type", "ts"])
     out = _run_to_table(deduped.agg(F.count("*").alias("cnt")), spark)
     return out
@@ -368,7 +333,7 @@ def q91_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q92_stream_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q04's event-name router counts from the micro-batch engine."""
-    ev = _events_stream(spark, sf_dir)
+    ev = _table_stream(spark, sf_dir, "events")
     out = _run_to_table(
         ev.groupBy("event_type").agg(F.count("*").alias("cnt")), spark
     )
@@ -386,7 +351,7 @@ def q104_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle applies verbatim. Pair counting happens batch-side on the sink
     table; the reference's analog is response correlation via
     ``response_to`` (event_stream/streams/reader.py:126-128)."""
-    ev = _events_stream(spark, sf_dir)
+    ev = _table_stream(spark, sf_dir, "events")
     clicks = (
         ev.where(col("event_type") == "click")
         .select("user_id", col("ts").alias("c_ts"), col("event_id").alias("c_id"))
@@ -420,7 +385,7 @@ def q105_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     the drained source equals the batch computation, so the
     gaps-and-islands oracle applies; a production pipeline uses append
     mode + watermark to emit closed sessions with bounded state."""
-    ev = _events_stream(spark, sf_dir)
+    ev = _table_stream(spark, sf_dir, "events")
     agg = (
         ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("sw"))
         .agg(F.count("*").alias("cnt"), F.sum("value").alias("sv"))
@@ -439,7 +404,6 @@ def _redis_hourly(spark: SparkSession, sf_dir: str, n_shards: int) -> DataFrame:
     in-process RESP2 streams (round-robin — a stand-in for any producer-side
     shard key), ingest them back through ONE ``rediswire`` streaming query,
     and run q90's hourly aggregation on the union."""
-    from ..catalog import load
     from ..sources.redis_stream import RedisStreamClient, register_rediswire
     from ..sources.resp_server import FakeRedisServer
 
@@ -551,29 +515,37 @@ FROM s GROUP BY 1 ORDER BY 1
 # --- streaming stateful top-k (q145) ---------------------------------------
 
 _TOPK_N = 5
-_TOPK_CHUNKS = 4
+_CHUNKS = 4
+_EVENT_CHUNK_COLS = ("event_id", "event_type", "value")
 
 
-def _events_chunks_dir(spark: SparkSession, sf_dir: str, n: int = _TOPK_CHUNKS) -> str:
-    """Split the events fixture into ``n`` parquet files (event_id mod n)
-    with strictly increasing mtimes, so maxFilesPerTrigger=1 yields a
-    genuinely MULTI-batch stream — unlike the single-file symlink feeds,
-    this exercises state carried across micro-batches."""
+def _chunks_dir(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    key_col: str,
+    cols: tuple[str, ...],
+    n: int = _CHUNKS,
+) -> tuple[str, StructType]:
+    """Split ``cols`` of a fixture table into ``n`` parquet files
+    (``key_col`` mod n) with strictly increasing mtimes, so
+    maxFilesPerTrigger=1 yields a genuinely MULTI-batch stream — unlike the
+    single-file symlink feeds, this exercises state carried across
+    micro-batches. Returns the directory and the written frame's schema
+    (the stream's schema)."""
     import glob
     import shutil
 
-    from ..catalog import load
-
+    frame = load(spark, sf_dir, table).select(*cols)
     tag = sf_dir.strip("/").replace("/", "_")
-    d = os.path.join(tempfile.gettempdir(), f"es_evchunks_{tag}")
+    d = os.path.join(tempfile.gettempdir(), f"es_{table}_chunks_{tag}")
     marker = os.path.join(d, "_READY")  # leading _ -> invisible to the source
     if not os.path.exists(marker):
         os.makedirs(d, exist_ok=True)
-        ev = load(spark, sf_dir, "events").select("event_id", "event_type", "value")
         base_t = 1_600_000_000
         for i in range(n):
             build = os.path.join(d, f"_build{i}")
-            ev.where(col("event_id") % n == i).coalesce(1).write.mode(
+            frame.where(col(key_col) % n == i).coalesce(1).write.mode(
                 "overwrite"
             ).parquet(build)
             src = glob.glob(os.path.join(build, "part-*.parquet"))[0]
@@ -582,37 +554,7 @@ def _events_chunks_dir(spark: SparkSession, sf_dir: str, n: int = _TOPK_CHUNKS) 
             os.utime(dst, times=(base_t + i, base_t + i))
             shutil.rmtree(build)
         open(marker, "w").close()
-    return d
-
-
-def _documents_chunks_dir(spark: SparkSession, sf_dir: str, n: int = 4) -> str:
-    """documents twin of ``_events_chunks_dir``: n parquet chunk files
-    (doc_id mod n) with strictly increasing mtimes, so
-    maxFilesPerTrigger=1 yields a genuinely multi-batch corpus stream."""
-    import glob
-    import shutil
-
-    from ..catalog import load
-
-    tag = sf_dir.strip("/").replace("/", "_")
-    d = os.path.join(tempfile.gettempdir(), f"es_docchunks_{tag}")
-    marker = os.path.join(d, "_READY")
-    if not os.path.exists(marker):
-        os.makedirs(d, exist_ok=True)
-        docs = load(spark, sf_dir, "documents")
-        base_t = 1_600_000_000
-        for i in range(n):
-            build = os.path.join(d, f"_build{i}")
-            docs.where(col("doc_id") % n == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(build)
-            src = glob.glob(os.path.join(build, "part-*.parquet"))[0]
-            dst = os.path.join(d, f"chunk{i}.parquet")
-            shutil.copy(src, dst)
-            os.utime(dst, times=(base_t + i, base_t + i))
-            shutil.rmtree(build)
-        open(marker, "w").close()
-    return d
+    return d, frame.schema
 
 
 def q145_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -640,7 +582,6 @@ def q145_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         LongType,
         StringType,
         StructField,
-        StructType,
     )
 
     out_schema = StructType(
@@ -679,15 +620,7 @@ def q145_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"event_type": [key[0]], "version": [ver], "ids": [ids], "vals": [vals]}
         )
 
-    d = _events_chunks_dir(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    d, schema = _chunks_dir(spark, sf_dir, "events", "event_id", _EVENT_CHUNK_COLS)
     ev = file_stream(spark, d, schema, max_files_per_trigger=1)
     snap = ev.groupBy("event_type").applyInPandasWithState(
         update,
@@ -722,10 +655,9 @@ def q190_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     registers; complete mode over a drained source ≡ q178's batch build,
     so q178's oracle applies verbatim — and because registers are
     duplicate-proof, replayed micro-batches cannot change the answer."""
-    from ..catalog import load
     from .sketch import hll_finish, hll_registers
 
-    ev = _events_stream(spark, sf_dir)
+    ev = _table_stream(spark, sf_dir, "events")
     reg = hll_registers(ev.select("event_type", "user_id"))
     drained = _run_to_table(reg, spark)
     exact = (
@@ -747,11 +679,10 @@ def q195_stream_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     ride-along column) run as a batch epilogue over the drained grid.
     Together q190/q195 cover both mergeable-sketch classes at the ingest
     path: max-merge (HLL registers) and sum-merge (CMS counters)."""
-    from ..catalog import load
     from ..functions import tokens
     from .sketch import _CMS_DEPTH, cms_cell, cms_finish
 
-    docs = _documents_stream(spark, sf_dir)
+    docs = _table_stream(spark, sf_dir, "documents")
     tok = docs.select(F.explode(tokens("text")).alias("term"))
     arms = [
         tok.select(lit(d).alias("d"), cms_cell(d).alias("cell"))
@@ -800,24 +731,13 @@ def q216_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         ArrayType,
         DoubleType,
         LongType,
-        StringType,
         StructField,
-        StructType,
     )
 
-    from ..catalog import load
     from ..functions import hash48
     from .ranking import exact_value_at_ranks
 
-    d = _events_chunks_dir(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    d, schema = _chunks_dir(spark, sf_dir, "events", "event_id", _EVENT_CHUNK_COLS)
     ev = file_stream(spark, d, schema, max_files_per_trigger=1)
     cand = ev.select(
         "event_id",
@@ -991,9 +911,6 @@ def q225_stream_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a driver OOM (the q158 panel-guard convention). Both paths
     compute identical integer sums (dict get == left join + coalesce),
     so the oracle is path-independent."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from ..catalog import load
     from ..functions import tokens
     from .text import _doremi_finish, _two_lm_tables
 
@@ -1017,17 +934,7 @@ def q225_stream_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
     lf_floor = int(round(math.log(1.0 / (trow["t_full"] + trow["v"])) * 1e3))
     lr_floor = int(round(math.log(1.0 / (trow["t_ref"] + trow["v"])) * 1e3))
 
-    d = _documents_chunks_dir(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-            StructField("source", StringType()),
-            StructField("n_chars", LongType()),
-        ]
-    )
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    d, schema = _chunks_dir(spark, sf_dir, "documents", "doc_id", ("*",))
     sdocs = file_stream(spark, d, schema, max_files_per_trigger=1)
     n_sp = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     if int(trow["v"]) <= _DOREMI_BCAST_VOCAB_CAP:
@@ -1098,22 +1005,10 @@ def q231_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer requires the gate's counters to survive across batches —
     which is what a production ingest gate does: accumulate accept/
     reject rates per source and alarm when a crawl's quality drifts."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     from ..functions import tokens
     from .text import classifier_logit_micro
 
-    d = _documents_chunks_dir(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-            StructField("source", StringType()),
-            StructField("n_chars", LongType()),
-        ]
-    )
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    d, schema = _chunks_dir(spark, sf_dir, "documents", "doc_id", ("*",))
     sdocs = file_stream(spark, d, schema, max_files_per_trigger=1)
     # Spread each micro-batch to cluster width BEFORE the expensive
     # scoring fold: a one-file trigger is ONE input partition, and the
@@ -1164,27 +1059,11 @@ def q239_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingests into LSH buckets, q231 gates quality at ingest, this
     maintains the IVF index + its drift signal (d_delta vs d_standing)
     at ingest."""
-    from pyspark.sql.types import (
-        ArrayType,
-        FloatType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     from ..functions import as_double_array
     from .similarity import _gemm_assign, _seed_matrix, auto_cells
 
-    schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("embedding", ArrayType(FloatType())),
-            StructField("label", IntegerType()),
-        ]
-    )
-    d = _link_table(sf_dir, "embeddings", "es_ivfstream")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    d = _link_table(sf_dir, "embeddings")
+    schema = _fixture_schema(spark, sf_dir, "embeddings")
     # Standing geometry + baseline from a BATCH read of the same landing
     # dir (a stream can't be collected at plan build — the q132 dim
     # convention): centroid seeds are a sqrt(N)-bounded collect.
@@ -1255,21 +1134,9 @@ def q244_stream_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     the drained state exactly q241's batch rollup under any
     micro-batching or replay split, so q241's duckdb oracle applies
     VERBATIM (the q225/q231/q239 convention)."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     from .dedup import _DECON_N, span_positions
 
-    d = _documents_chunks_dir(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-            StructField("source", StringType()),
-            StructField("n_chars", LongType()),
-        ]
-    )
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    d, schema = _chunks_dir(spark, sf_dir, "documents", "doc_id", ("*",))
     pos = span_positions("text", _DECON_N)
     # Frozen benchmark windows from the landing dir at rest (a stream
     # cannot be collected at plan build — the q132/q239 dim convention).

@@ -235,11 +235,20 @@ class EngineConfig:
         busses: list[BusConfig] = []
         for bi, bus_raw in enumerate(raw.get("busses", [])):
             bpath = f"$.busses[{bi}]"
+            # Names key the compiled routes, the sinks run_batch picks and
+            # the per-route checkpoint dirs: a duplicate would silently
+            # replace its twin, so reject it.
+            bus_name = bus_raw.get("name", f"bus{bi}")
+            if any(b.name == bus_name for b in busses):
+                errors.append(f"{bpath}.name: duplicate bus name {bus_name!r}")
             routes: list[RouteConfig] = []
             if not (bus_raw.get("source_table") or bus_raw.get("source_path")):
                 errors.append(f"{bpath}: one of source_table/source_path is required")
             for ri, route_raw in enumerate(bus_raw.get("routes", [])):
                 rpath = f"{bpath}.routes[{ri}]"
+                route_name = route_raw.get("name", f"route{ri}")
+                if any(r.name == route_name for r in routes):
+                    errors.append(f"{rpath}.name: duplicate route name {route_name!r}")
                 if not route_raw.get("event"):
                     errors.append(f"{rpath}.event: required")
                 transform = None
@@ -259,7 +268,7 @@ class EngineConfig:
                     errors.append(f"{rpath}.sink.target: required for {sink_raw.get('kind')}")
                 routes.append(
                     RouteConfig(
-                        name=route_raw.get("name", f"route{ri}"),
+                        name=route_name,
                         event=route_raw.get("event", ""),
                         aliases=tuple(route_raw.get("aliases", [])),
                         transform=transform,
@@ -278,7 +287,7 @@ class EngineConfig:
                 )
             busses.append(
                 BusConfig(
-                    name=bus_raw.get("name", f"bus{bi}"),
+                    name=bus_name,
                     source_table=bus_raw.get("source_table"),
                     source_path=bus_raw.get("source_path"),
                     routes=tuple(routes),

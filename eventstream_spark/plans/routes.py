@@ -30,8 +30,9 @@ from pyspark.sql.functions import col
 from pyspark.storagelevel import StorageLevel
 from pyspark.util import inheritable_thread_target
 
-from ..catalog import fix_nanos_ts, load
+from ..catalog import load
 from ..codec import normalize_envelope
+from ..sources.stream import file_stream
 from .transforms import observe_route
 from .config import (
     BusConfig,
@@ -54,6 +55,18 @@ def _source_batch(spark: SparkSession, cfg: EngineConfig, bus: BusConfig, sf_dir
     )
 
 
+def _source_stream(
+    spark: SparkSession, cfg: EngineConfig, source_dir: str, schema
+) -> DataFrame:
+    """Streaming twin of ``_source_batch``: the bus's landing directory as
+    an envelope stream (``file_stream`` pins the session and fixes ``ts``)."""
+    return normalize_envelope(
+        file_stream(spark, source_dir, schema),
+        application_name=cfg.application_name,
+        application_instance=cfg.application_instance,
+    )
+
+
 def _apply_route(df: DataFrame, route: RouteConfig) -> DataFrame:
     out = df.where(col("event").isin(*route.events))
     if route.transform is not None:
@@ -69,7 +82,7 @@ def compile_bus(
     return {route.name: _apply_route(src, route) for route in bus.routes}
 
 
-def _write_batch(df: DataFrame, sink: SinkConfig, batch_tag: str | None = None) -> None:
+def _write_batch(df: DataFrame, sink: SinkConfig) -> None:
     if sink.kind == "noop":
         df.write.format("noop").mode("overwrite").save()
     elif sink.kind == "console":
@@ -83,8 +96,8 @@ def _write_batch(df: DataFrame, sink: SinkConfig, batch_tag: str | None = None) 
         raise ValueError(f"unknown sink kind {sink.kind!r}")
 
 
-def _write_route(df: DataFrame, route: RouteConfig, batch_tag: str) -> None:
-    _write_batch(_apply_route(df, route), route.sink, batch_tag)
+def _write_route(df: DataFrame, route: RouteConfig) -> None:
+    _write_batch(_apply_route(df, route), route.sink)
 
 
 def run_batch(spark: SparkSession, cfg: EngineConfig, sf_dir: str) -> dict[str, int]:
@@ -139,16 +152,7 @@ def start_streaming(
     not committed and is replayed on restart: at-least-once, so parquet
     routes may hold a replayed batch's rows twice.
     """
-    # fix_nanos_ts's NTZ→LTZ cast reads the session timezone: pin UTC before
-    # building the stream so a caller-supplied non-UTC session can't shift
-    # every event timestamp (same contract as catalog.load for batch).
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = fix_nanos_ts(spark.readStream.schema(schema).parquet(source_dir))
-    env = normalize_envelope(
-        raw,
-        application_name=cfg.application_name,
-        application_instance=cfg.application_instance,
-    )
+    env = _source_stream(spark, cfg, source_dir, schema)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist(StorageLevel.MEMORY_AND_DISK)
@@ -163,7 +167,6 @@ def start_streaming(
                         inheritable_thread_target(batch_df.sparkSession)(_write_route),
                         batch_df,
                         route,
-                        str(batch_id),
                     )
                     for route in bus.routes
                 ]
@@ -203,15 +206,7 @@ def start_streaming_per_route(
     (no foreachBatch involved). If ``manager`` (a QueryManager) is given,
     each query is registered under ``bus:route``.
     """
-    # Same UTC pin as start_streaming: the NTZ→LTZ ts cast must not depend
-    # on the caller session's timezone.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = fix_nanos_ts(spark.readStream.schema(schema).parquet(source_dir))
-    env = normalize_envelope(
-        raw,
-        application_name=cfg.application_name,
-        application_instance=cfg.application_instance,
-    )
+    env = _source_stream(spark, cfg, source_dir, schema)
     queries = {}
     for route in bus.routes:
         routed = _apply_route(env, route)

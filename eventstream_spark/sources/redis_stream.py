@@ -65,7 +65,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from .wire import WIRE_SCHEMA, _ts_from_message_id
+from .wire import WIRE_SCHEMA, _arrow_batch
 
 _CRLF = b"\r\n"
 
@@ -265,27 +265,6 @@ class RedisStreamClient:
 # --- Spark data source -----------------------------------------------------
 
 _PAGE = 1000
-
-
-def _arrow_batch(entries):
-    """One XRANGE page → one Arrow RecordBatch (message_id, ts, fields).
-    Yielding RecordBatches instead of per-row tuples moves the
-    Python-source boundary from ~0.6 ms/row to one columnar hand-off per
-    page (~10× on a 10k-row read, measured)."""
-    import pyarrow as pa
-
-    ids = [e[0] for e in entries]
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(ids, type=pa.string()),
-            pa.array([_ts_from_message_id(i) for i in ids], type=pa.timestamp("us")),
-            pa.array(
-                [list(e[1].items()) for e in entries],
-                type=pa.map_(pa.string(), pa.string()),
-            ),
-        ],
-        names=["message_id", "ts", "fields"],
-    )
 
 
 def _wire_rows(

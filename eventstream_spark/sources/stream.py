@@ -6,8 +6,11 @@ Structured Streaming source + a checkpoint directory: the checkpoint replaces
 group offsets (A3), replay-on-failure replaces inbox/idle reclamation
 (A15-A18). Three concrete sources:
 
-- `file_stream` — tail a growing directory of files (the local/test path and
-  the lakehouse-landing-zone path at scale);
+- `file_stream` — tail a growing parquet directory (the local/test path and
+  the lakehouse-landing-zone path at scale). It is the package's one
+  reader of a parquet landing zone: it owns the session pin (UTC) and the
+  ``ts`` normalization, so every streaming read interprets the tz-naive
+  fixture timestamps exactly as the batch catalog does;
 - `kafka_stream` — the true high-throughput stream transport; option-complete
   but gated on the Kafka connector jars being on the classpath;
 - `rate_stream`  — synthetic load for soak tests.
@@ -18,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from ..catalog import EVENTS_RAW_SCHEMA, fix_nanos_ts
+from ..catalog import EVENTS_RAW_SCHEMA, _pin_session, fix_nanos_ts
 from ..codec import normalize_envelope
 
 
@@ -26,23 +29,26 @@ def file_stream(
     spark: SparkSession,
     path: str,
     schema: StructType,
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
-    **options: str,
 ) -> DataFrame:
-    """Tail a directory as a stream. Schema is required (streaming sources
-    never infer — per-batch inference would let the schema drift, SURVEY §7
-    hard-part 2).
+    """Tail a parquet directory as a stream. Schema is required (streaming
+    sources never infer — per-batch inference would let the schema drift,
+    SURVEY §7 hard-part 2).
+
+    The session is pinned (UTC, nanosAsLong) before the stream is built, by
+    the same helper ``catalog.load`` uses, so ``fix_nanos_ts``'s NTZ → LTZ
+    cast and every event-time op downstream read the wall-clock the batch
+    catalog and the duckdb oracles read, whatever the caller's session said.
+    ``fix_nanos_ts`` is a no-op on tables without ``ts``.
 
     `max_files_per_trigger` bounds micro-batch size so executor memory is
     sized by trigger, not by backlog — the scale knob for catch-up reads.
     """
+    _pin_session(spark)
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    for key, value in options.items():
-        reader = reader.option(key, value)
-    return reader.format(fmt).load(path)
+    return fix_nanos_ts(reader.parquet(path))
 
 
 def events_file_stream(
@@ -52,19 +58,18 @@ def events_file_stream(
     application_instance: str | None = None,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """An events landing directory as an envelope stream: file source →
-    nanos fix → canonical envelope (event, message_id, ts, props map,
-    header). ``source_dir`` is a directory of parquet files in the fixture
-    events schema (the Spark file source tails directories, not single
-    files — stage/symlink the fixture into one for tests)."""
-    raw = file_stream(
-        spark,
-        source_dir,
-        EVENTS_RAW_SCHEMA,
-        max_files_per_trigger=max_files_per_trigger,
-    )
+    """An events landing directory as an envelope stream: ``file_stream``
+    → canonical envelope (event, message_id, ts, props map, header).
+    ``source_dir`` is a directory of parquet files in the fixture events
+    schema (the Spark file source tails directories, not single files —
+    stage/symlink the fixture into one for tests)."""
     return normalize_envelope(
-        fix_nanos_ts(raw),
+        file_stream(
+            spark,
+            source_dir,
+            EVENTS_RAW_SCHEMA,
+            max_files_per_trigger=max_files_per_trigger,
+        ),
         application_name=application_name,
         application_instance=application_instance,
     )

@@ -77,25 +77,31 @@ def _ts_from_message_id(message_id: str) -> datetime:
     )
 
 
-def _read_wire_file(fpath: str, page: int = 2000):
-    """Yield Arrow RecordBatches of wire rows (columnar hand-off per page —
-    the per-row tuple path costs ~0.6 ms/row at the Python-source
-    boundary; see redis_stream._arrow_batch for the measurement)."""
+def _arrow_batch(entries):
+    """One page of ``(message_id, {field: value})`` entries → one Arrow
+    RecordBatch in ``WIRE_SCHEMA`` (ts from the ID's millis prefix). The
+    one wire-to-Arrow converter: the file source and the Redis source both
+    page through it. Yielding RecordBatches instead of per-row tuples moves
+    the Python-source boundary from ~0.6 ms/row to one columnar hand-off
+    per page (~10× on a 10k-row read, measured)."""
     import pyarrow as pa
 
-    def batch(rows):
-        return pa.RecordBatch.from_arrays(
-            [
-                pa.array([r[0] for r in rows], type=pa.string()),
-                pa.array([r[1] for r in rows], type=pa.timestamp("us")),
-                pa.array(
-                    [list(r[2].items()) for r in rows],
-                    type=pa.map_(pa.string(), pa.string()),
-                ),
-            ],
-            names=["message_id", "ts", "fields"],
-        )
+    ids = [e[0] for e in entries]
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(ids, type=pa.string()),
+            pa.array([_ts_from_message_id(i) for i in ids], type=pa.timestamp("us")),
+            pa.array(
+                [list(e[1].items()) for e in entries],
+                type=pa.map_(pa.string(), pa.string()),
+            ),
+        ],
+        names=["message_id", "ts", "fields"],
+    )
 
+
+def _read_wire_file(fpath: str, page: int = 2000):
+    """Yield Arrow RecordBatches of wire rows, ``page`` lines at a time."""
     rows = []
     with open(fpath, "r", encoding="utf-8") as fh:
         for line in fh:
@@ -103,14 +109,13 @@ def _read_wire_file(fpath: str, page: int = 2000):
             if not line:
                 continue
             entry = json.loads(line)
-            mid = str(entry["id"])
             fields = {str(k): str(v) for k, v in entry.get("fields", {}).items()}
-            rows.append((mid, _ts_from_message_id(mid), fields))
+            rows.append((str(entry["id"]), fields))
             if len(rows) >= page:
-                yield batch(rows)
+                yield _arrow_batch(rows)
                 rows = []
     if rows:
-        yield batch(rows)
+        yield _arrow_batch(rows)
 
 
 class _FilePartition(InputPartition):

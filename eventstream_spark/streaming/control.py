@@ -15,6 +15,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 import shutil
+import time
 from dataclasses import dataclass
 from typing import Any
 
@@ -130,12 +131,17 @@ class QueryManager:
             shutil.rmtree(checkpoint)
 
     def await_all(self, timeout_sec: float | None = None) -> None:
+        """Wait for every registered query to terminate, raising the first
+        failure. ``timeout_sec`` bounds the whole call: all queries share
+        one deadline, and each waits for what is left of it (at least 1 ms,
+        since Spark rejects a zero timeout)."""
+        deadline = None if timeout_sec is None else time.monotonic() + timeout_sec
         for name in self.names():
             q = self._queries[name]
-            if timeout_sec is None:
+            if deadline is None:
                 q.awaitTermination()
             else:
-                q.awaitTermination(int(timeout_sec * 1000))
+                q.awaitTermination(max(deadline - time.monotonic(), 0.001))
 
     def idle_seconds(self, name: str) -> float | None:
         """Seconds since the query last made progress; ``None`` while an

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import time
 
 from eventstream_spark.catalog import EVENTS_RAW_SCHEMA, load, table_path
 from eventstream_spark.sources import file_stream, rate_stream
@@ -54,6 +55,22 @@ def test_manager_stop_all(spark, tmp_path):
     assert stopped == ["app:i0", "app:i1"]
     for name in mgr.names():
         mgr.purge(name, drop_checkpoint=True)
+
+
+def test_await_all_timeout_is_seconds_shared_by_all_queries(spark, tmp_path):
+    """``await_all(timeout_sec=1)`` returns after about a second in total,
+    leaving never-ending queries running."""
+    mgr = QueryManager(spark)
+    for i in range(2):
+        ckpt = str(tmp_path / f"ckpt_{i}")
+        mgr.register(f"app:w{i}", _start_rate_query(spark, f"qw{i}", ckpt), ckpt)
+    try:
+        t0 = time.monotonic()
+        mgr.await_all(timeout_sec=1)
+        assert time.monotonic() - t0 < 10
+        assert all(mgr.info(name).is_active for name in mgr.names())
+    finally:
+        mgr.stop_all()
 
 
 def test_trim_and_archive_keeps_newest(spark, sf_dir, tmp_path):

@@ -1,6 +1,7 @@
 """Live Redis-Stream ingestion (A1 against a real socket): the RESP client
 and the rediswire data source exercised end-to-end against an in-process
-RESP2 server (tests/fake_redis.py) — no Redis binary needed."""
+RESP2 server (eventstream_spark/sources/resp_server.py) — no Redis binary
+needed."""
 
 from __future__ import annotations
 
@@ -11,8 +12,7 @@ from eventstream_spark.sources.redis_stream import (
     RespError,
     register_rediswire,
 )
-
-from fake_redis import FakeRedisServer
+from eventstream_spark.sources.resp_server import FakeRedisServer
 
 
 def _fill(client, n=3):

@@ -73,6 +73,21 @@ def test_validation_aggregates_all_errors(tmp_path, monkeypatch):
     assert len(exc.value.errors) == 4
 
 
+def test_duplicate_bus_and_route_names_rejected(tmp_path, monkeypatch):
+    """A second route (or bus) under a taken name would replace its twin in
+    compile_bus's name-keyed dict and share its checkpoint dir."""
+    monkeypatch.setenv("TEST_INSTANCE_ID", "i")
+    raw = _config_dict(tmp_path)
+    raw["busses"][0]["routes"][1]["name"] = "clicks"
+    raw["busses"].append(dict(raw["busses"][0], routes=[]))
+    with pytest.raises(ConfigurationError) as exc:
+        EngineConfig.from_dict(raw)
+    assert exc.value.errors == [
+        "$.busses[0].routes[1].name: duplicate route name 'clicks'",
+        "$.busses[1].name: duplicate bus name 'events_bus'",
+    ]
+
+
 def test_transform_signature_enforced(tmp_path, monkeypatch):
     monkeypatch.setenv("TEST_INSTANCE_ID", "i")
     raw = _config_dict(tmp_path)

@@ -124,6 +124,54 @@ def test_events_file_stream_yields_envelope(spark, sf_dir, tmp_path):
     assert row.application_name == "app" and row.event is not None
 
 
+def test_streaming_reads_pin_utc_on_a_non_utc_session(spark, sf_dir, tmp_path):
+    """``file_stream`` pins the session to UTC, so streams started from a
+    non-UTC session (a driver's vanilla one, say) read the same event times
+    as the UTC batch plan and the duckdb oracle."""
+    import pyspark.sql.functions as F
+
+    from eventstream_spark.operators.streaming_queries import ORACLES, q90_stream_hourly
+    from eventstream_spark.plans import EngineConfig, compile_bus, start_streaming
+    from eventstream_spark.testing import assert_matches_oracle
+
+    src = _stage_events_dir(sf_dir, tmp_path)
+    sink = str(tmp_path / "clicks")
+    cfg = EngineConfig.from_dict(
+        {
+            "application_name": "tz",
+            "application_instance": "0",
+            "busses": [
+                {
+                    "name": "ev",
+                    "source_path": src,
+                    "routes": [
+                        {"name": "clicks", "event": "click",
+                         "sink": {"kind": "parquet", "target": sink}}
+                    ],
+                }
+            ],
+        }
+    )
+    tz = "spark.sql.session.timeZone"
+    try:
+        spark.conf.set(tz, "America/New_York")
+        q = start_streaming(
+            spark, cfg, cfg.busses[0], src, EVENTS_RAW_SCHEMA, str(tmp_path / "ckpt")
+        )
+        assert q.awaitTermination(120)
+        spark.conf.set(tz, "America/New_York")
+        hourly = q90_stream_hourly(spark, sf_dir)
+    finally:
+        spark.conf.set(tz, "UTC")
+
+    def id_micros(df):  # unix_micros reads the instant, not the session zone
+        return sorted(df.select("message_id", F.unix_micros("ts")).collect())
+
+    want = compile_bus(spark, cfg, cfg.busses[0], sf_dir)["clicks"]
+    assert id_micros(spark.read.parquet(sink)) == id_micros(want)
+    assert_matches_oracle(hourly, ORACLES["q90_stream_hourly"], sf_dir)
+
+
 def test_kafka_stream_connector_gate(spark):
     """Dual-mode: with the connector on the classpath (--packages
     org.apache.spark:spark-sql-kafka-0-10_2.13:4.1.2) the factory must
